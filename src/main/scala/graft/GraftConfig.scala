@@ -112,7 +112,7 @@ object GraftConfig {
   /** None (default) = no automatic delta compaction in the streaming
     * index lifecycle; Some(n ≥ 2) = [[graft.streaming.IndexLifecycle.tick]]
     * folds the serving generation's delta batches through
-    * [[graft.llm.Similarity.ivfIndexCompact]] whenever the committed
+    * [[graft.llm.Similarity.IvfIndex.compact]] whenever the committed
     * set reaches n (r16 — the `ledgerCompactEvery` discipline applied
     * to the ANN index; n = 1 is rejected because compacting after every
     * tick rewrites the whole delta mass per batch, the quadratic

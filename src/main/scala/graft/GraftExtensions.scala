@@ -124,33 +124,19 @@ object GraftExtensions {
       s"$signature takes exactly $n argument${if (n == 1) "" else "s"}, " +
         s"got ${args.length}")
 
-  /** ONE index-serving dispatch for every SQL surface (point TVF, batch
-    * TVF, hosted LATERAL — r19): resolve a lifecycle root to its
-    * CURRENT generation, then route by store shape. PQ-shaped stores
-    * split again (r19 find, exposed by the lateral spec): a lifecycle
-    * GENERATION carries `assignments/` and serves through
-    * [[graft.llm.Similarity.ivfPqGenQuery]] (committed code deltas +
-    * the assignments read discipline), while a plain
-    * [[graft.llm.Similarity.ivfPqIndexBuild]] root stores its
-    * full-precision vectors at `vectors/` and serves through
-    * [[graft.llm.Similarity.ivfPqIndexQuery]] — before this split the
-    * batch TVF failed on plain PQ roots with a bare PATH_NOT_FOUND.
+  /** ONE index-serving entry for every SQL surface (point TVF, batch
+    * TVF, hosted LATERAL): resolve a lifecycle root to its CURRENT
+    * generation, then serve whatever store shape
+    * [[graft.llm.Similarity.IvfIndex.open]] detects there (Flat, PQ
+    * generation or standalone PQ build, SQ8).
     */
   private[graft] def servePersistedIndex(
       spark: org.apache.spark.sql.SparkSession, root: String,
       q: org.apache.spark.sql.DataFrame, k: Int,
-      nprobe: Option[Int]): org.apache.spark.sql.DataFrame = {
-    val idx = graft.streaming.IndexLifecycle.currentRoot(spark, root)
-      .getOrElse(root)
-    if (graft.llm.Similarity.hasPqShape(spark, idx)) {
-      val asg = new org.apache.hadoop.fs.Path(s"$idx/assignments")
-      val hasAssignments = asg.getFileSystem(
-        spark.sessionState.newHadoopConf()).exists(asg)
-      if (hasAssignments)
-        graft.llm.Similarity.ivfPqGenQuery(spark, idx, q, k, nprobe)
-      else graft.llm.Similarity.ivfPqIndexQuery(spark, idx, q, k, nprobe)
-    } else graft.llm.Similarity.ivfIndexQuery(spark, idx, q, k, nprobe)
-  }
+      nprobe: Option[Int]): org.apache.spark.sql.DataFrame =
+    graft.llm.Similarity.IvfIndex.open(spark,
+      graft.streaming.IndexLifecycle.currentRoot(spark, root).getOrElse(root))
+      .serve(q, k, nprobe)
 
   /** The serving merge table, loaded at analysis time from the active
     * session's `spark.graft.bpe.modelRoot`. Fails loudly (not with a
@@ -180,7 +166,7 @@ object GraftExtensions {
     * BPE SQL functions. Arguments must be foldable (a query vector is
     * a constant of the query, not a column — for a column of queries
     * use [[annTopKBatchBuilder]]'s `graft_ann_topk_batch` from SQL, or
-    * the DataFrame API's `ivfIndexQuery`).
+    * the DataFrame API's `IvfIndex.serve`).
     */
   private[graft] def annTopKBuilder(
       args: Seq[Expression]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -245,7 +231,8 @@ object GraftExtensions {
       throw new IllegalStateException(
         "graft_ann_topk serves the PERSISTED vector index: set " +
           s"${GraftConfig.IndexRootKey} to an IVF index or IndexLifecycle " +
-          "root (or use graft.llm.Similarity.ivfIndexQuery directly)"))
+          "root (or serve a DataFrame directly: " +
+          "graft.llm.Similarity.IvfIndex.open(spark, root).serve(queries, k))"))
     import spark.implicits._
     // qid −1: the serving paths exclude vid == qid (self-match), and a
     // SQL literal query is not a corpus member — no corpus vid may be
@@ -313,7 +300,8 @@ object GraftExtensions {
       throw new IllegalStateException(
         "graft_ann_topk_batch serves the PERSISTED vector index: set " +
           s"${GraftConfig.IndexRootKey} to an IVF index or IndexLifecycle " +
-          "root (or use graft.llm.Similarity.ivfIndexQuery directly)"))
+          "root (or serve a DataFrame directly: " +
+          "graft.llm.Similarity.IvfIndex.open(spark, root).serve(queries, k))"))
     val q = spark.table(table)
       .select(org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.col("embedding"))

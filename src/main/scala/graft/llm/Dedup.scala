@@ -683,7 +683,7 @@ object Dedup {
   /** Right-to-be-forgotten cascade into the st11 closure-label store —
     * the member of the q80 purge family that was missing (q80 rewrites
     * the serving datasets, `purgeIncrementalLedger` the st9 artifact
-    * index, `ivfIndexPurge` the ANN index; comp labels are doc-derived
+    * index, `IvfIndex.purge` the ANN index; comp labels are doc-derived
     * artifacts too, and the store would otherwise keep purged doc ids
     * forever). Semantics:
     *
@@ -1524,8 +1524,23 @@ object Dedup {
   private val sessionTag: String =
     java.lang.Long.toHexString(java.util.UUID.randomUUID().getMostSignificantBits)
 
+  /** Every run-dir prefix the engine writes under a spill base — the
+    * one list both namers accept and [[pruneStaleRuns]] reclaims, so a
+    * new spill kind cannot be created without becoming prunable.
+    */
+  private[graft] val SpillPrefixes: Set[String] = Set(
+    "bpelc", "cap", "cc", "fdoor", "forget", "incart", "incartb", "incverb",
+    "ivf", "ivfidx", "ivflc", "ivfpq", "ivfrx", "ivfsq8", "lm", "lmk",
+    "lshdiag", "ph", "snm", "tok")
+
+  private def spillPrefix(prefix: String): String = {
+    require(SpillPrefixes(prefix),
+      s"spill dir prefix '$prefix' is not in Dedup.SpillPrefixes")
+    prefix
+  }
+
   private[graft] def runDirName(prefix: String): String =
-    s"$prefix-$sessionTag-${java.util.UUID.randomUUID()}"
+    s"${spillPrefix(prefix)}-$sessionTag-${java.util.UUID.randomUUID()}"
 
   /** A DETERMINISTIC session-scoped dir name (no UUID): same prefix +
     * name within one JVM always maps to the same path, so a build-once
@@ -1534,7 +1549,7 @@ object Dedup {
     * (the session tag is embedded exactly like [[runDirName]]).
     */
   private[graft] def sessionDirName(prefix: String, name: String): String =
-    s"$prefix-$sessionTag-$name"
+    s"${spillPrefix(prefix)}-$sessionTag-$name"
 
   /** Run dirs created by THIS session whose returned plans may still be
     * live (the cc-/tok-/snm- spills). Recorded at creation so
@@ -1587,12 +1602,8 @@ object Dedup {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.listStatus(p).foreach { st =>
         val n = st.getPath.getName
-        val foreignRun =
-          (n.startsWith("cc-") || n.startsWith("tok-") || n.startsWith("snm-") ||
-            n.startsWith("lm-") || n.startsWith("mmr-") || n.startsWith("ivf-") ||
-            n.startsWith("ivfidx-") || n.startsWith("ivfpq-") ||
-            n.startsWith("incart-")) &&
-            !n.contains(sessionTag)
+        val foreignRun = SpillPrefixes(n.takeWhile(_ != '-')) &&
+          !n.contains(sessionTag)
         if (foreignRun && st.getModificationTime < cutoff)
           fs.delete(st.getPath, true)
       }

@@ -69,7 +69,7 @@ case class AnnTopKHole(vec: Expression, k: Int, nprobe: Option[Int])
   *     alias re-applied so `t.vid`/`t.sim` resolve upstream.
   *
   * Scale: the query side of an ANN serve is the parameter-bounded side
-  * (it broadcasts inside `ivfIndexQuery`/`pqServeCore` already); the
+  * (it broadcasts inside `IvfIndex.serve` already); the
   * corpus side streams through the directory-pruned index exactly as in
   * the batch TVF. Hosted shapes: INNER/CROSS lateral with no ON
   * condition and the call as the direct lateral relation (optionally
@@ -126,7 +126,8 @@ case class ResolveLateralAnnTopK(spark: SparkSession)
       throw Shim.analysisException(
         "graft_ann_topk serves the PERSISTED vector index: set " +
           s"${GraftConfig.IndexRootKey} to an IVF index or IndexLifecycle " +
-          "root (or use graft.llm.Similarity.ivfIndexQuery directly)"))
+          "root (or serve a DataFrame directly: " +
+          "graft.llm.Similarity.IvfIndex.open(spark, root).serve(queries, k))"))
     val leftDF = Shim.ofRows(spark, left)
     val vecCol = Shim.column(vecRes)
     val qvecs = leftDF.select(vecCol.as("embedding"))

@@ -371,7 +371,7 @@ object BpeLifecycle {
         ()
       }
       Streams.writeAppliedBatches(fs, new Path(lcRoot), applied + batchId)
-      // opt-in histogram compaction (the ivfIndexCompact discipline on
+      // opt-in histogram compaction (the IvfIndex.compact discipline on
       // the corpus store): fold the committed entry set into ONE dir
       // once it reaches the threshold — runs after the applied-set
       // write, so a crash anywhere around it leaves a fully-consistent
@@ -387,7 +387,7 @@ object BpeLifecycle {
 
   /** Fold every committed histogram dir into ONE (`compact=<n>`, the
     * summed histogram) with a single atomic manifest flip — the corpus
-    * store's [[graft.llm.Similarity.ivfIndexCompact]]: between retrains
+    * store's [[graft.llm.Similarity.IvfIndex.compact]]: between retrains
     * a continuous crawl otherwise accumulates one dir per batch
     * forever, and every retrain's merged read pays O(#batches) opens.
     * Correct BY histogram additivity (the summed dir trains identically
@@ -625,7 +625,7 @@ object BpeLifecycle {
     * forgotten docs, so [[BpeArtifact]]'s keep-every-version provenance
     * promise yields to RTBF here, exactly as the IVF purge overwrites
     * history. Superseded histogram revisions are swept last, guarded on
-    * the manifest (the [[graft.llm.Similarity.ivfIndexCompact]] lesson:
+    * the manifest (the [[graft.llm.Similarity.IvfIndex.compact]] lesson:
     * only dirs whose batch id the manifest lists under a DIFFERENT
     * revision are provably dead).
     *

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.llm.Similarity
+import graft.llm.Similarity.{IvfIndex, Quantizer}
 
 /** Drift-aware STREAMING index lifecycle (st12) — the s18/s19/s20 arc
   * run continuously: vector batches arrive as a stream, in-distribution
@@ -56,7 +57,7 @@ import graft.llm.Similarity
   *
   * A retrain generation absorbs every prior delta (the rebuild reads
   * base ∪ deltas), so retrains double as delta compaction; the RTBF
-  * cascade ([[Similarity.ivfIndexPurge]]) reaches base and deltas of
+  * cascade ([[IvfIndex.purge]]) reaches base and deltas of
   * the CURRENT generation. Prior generations are dead directories the
   * retention policy reclaims: [[reclaimDeadGenerations]] deletes
   * committed generations strictly older than the serving one (keeping
@@ -174,13 +175,13 @@ object IndexLifecycle {
   private[streaming] def driftBase(spark: SparkSession, genRoot: String): DataFrame = {
     val p = new Path(s"$genRoot/driftref")
     if (fsOf(spark, genRoot).exists(p)) spark.read.parquet(p.toString)
-    else Similarity.ivfIndexAssignments(spark, genRoot)
+    else IvfIndex.open(spark, genRoot).vectors
       .select(col("vid").as("vec_id"), col("ve").as("embedding"))
   }
 
   /** Build the initial generation from a base corpus and commit it.
     * r12: generations carry the s23 PQ serving shape from birth —
-    * [[Similarity.pqAugmentIndex]] trains the generation's PQ codebook
+    * [[IvfIndex.withPq]] trains the generation's PQ codebook
     * and writes the cell-partitioned code store beside the assignments,
     * all BEFORE the commit marker (a generation is never committed
     * half-shaped; a crash mid-augment leaves an uncommitted dir its
@@ -197,13 +198,22 @@ object IndexLifecycle {
     // overlap (guide §2.6) — the commit marker still lands strictly
     // after BOTH, so the crash window is unchanged.
     val nBase = baseVecs.count()
-    Similarity.ivfIndexBuild(baseVecs,
-      nlist = Some(Similarity.deriveNlist(nBase)), targetDir = Some(root))
-    Similarity.inParallel(
-      writeDriftRef(spark, root, baseVecs, nBase),
-      Similarity.pqAugmentIndex(spark, root, baseVecs, nRows = Some(nBase)))
+    buildGeneration(spark, root, baseVecs, nBase)
     commitGen(spark, lcRoot, "gen-init")
     root
+  }
+
+  /** Build an uncommitted generation at `root` from `vecs` (`n` rows):
+    * the sampled √N coarse quantizer, then the PQ codec and the drift
+    * reference — independent outputs of the same dir, overlapped; the
+    * caller commits strictly after both.
+    */
+  private def buildGeneration(spark: SparkSession, root: String,
+      vecs: DataFrame, n: Long): Unit = {
+    val idx = IvfIndex.build(vecs,
+      Quantizer.sampled(vecs, Some(Similarity.deriveNlist(n))), Some(root))
+    Similarity.inParallel(writeDriftRef(spark, root, vecs, n), idx.withPq(vecs, n))
+    ()
   }
 
   /** Delete dead index generations (the storage half of the retrain
@@ -262,27 +272,16 @@ object IndexLifecycle {
       // the whole historical corpus per micro-batch)
       if (Similarity.correctedMaxPsi(driftBase(spark, g), batch)
           >= psiThreshold) {
-        val old = Similarity.ivfIndexAssignments(spark, g)
+        val old = IvfIndex.open(spark, g).vectors
           .select(col("vid").as("vec_id"), col("ve").as("embedding"))
         val name = s"gen-b$batchId"
         val newRoot = s"$lcRoot/$name"
         fs.delete(new Path(newRoot), true) // crashed prior attempt
         val full = old.unionByName(batch)
-        // the rebuild's corpus count prices nlist AND the new reference
-        // sample — ONE metadata-cheap job on the retrain path (r20: the
-        // build used to re-count the same union internally)
-        val nFull = full.count()
-        Similarity.ivfIndexBuild(full,
-          nlist = Some(Similarity.deriveNlist(nFull)), targetDir = Some(newRoot))
-        // retrain re-trains BOTH codebooks (the r11 verdict's wiring
-        // item): the coarse centroids above, and the PQ codebook here —
-        // a drifted corpus moved off the old quantizer's manifold too.
-        // r20: the drift-reference sample and the PQ augment are
-        // independent outputs of the uncommitted generation — overlap
-        // them (guide §2.6); commitGen still follows both.
-        Similarity.inParallel(
-          writeDriftRef(spark, newRoot, full, nFull),
-          Similarity.pqAugmentIndex(spark, newRoot, full, nRows = Some(nFull)))
+        // ONE count prices nlist, the PQ training sample and the new
+        // drift reference; the retrain re-trains BOTH codebooks — a
+        // drifted corpus moved off the old PQ manifold too
+        buildGeneration(spark, newRoot, full, full.count())
         Streams.writeAppliedBatches(fs, new Path(newRoot), applied + batchId)
         commitGen(spark, lcRoot, name)
         // the retention policy: dead generations are reclaimed at the
@@ -291,23 +290,12 @@ object IndexLifecycle {
         reclaimDeadGenerations(spark, lcRoot, keepGenerations)
         true
       } else {
-        // the serving-resident side of the same delta: encode the batch
-        // through the generation's FROZEN codebooks into its own
-        // overwritten codes_deltas/batch dir (idempotent like the
-        // vector delta; a pre-r12 generation without a codebook keeps
-        // full-precision serving and skips the encode). r20: readers
-        // see the batch only when BOTH dirs carry _SUCCESS (the joint
-        // gate), so write order is visibility-irrelevant — overlap the
-        // two writes (guide §2.6); the manifest record stays after both.
-        if (Similarity.hasPqShape(spark, g))
-          Similarity.inParallel(
-            Similarity.ivfIndexAppendDelta(spark, g, batch, batchId),
-            Similarity.ivfPqEncodeDelta(spark, g, batch, batchId))
-        else
-          Similarity.ivfIndexAppendDelta(spark, g, batch, batchId)
-        // joint commit point (r16): both stores landed — record the batch
-        // in the one-read manifest every later serve/purge consults
-        Similarity.recordDeltaBatch(spark, g, batchId)
+        // the batch lands as an idempotent delta through the generation's
+        // FROZEN codebooks — vectors and (on a PQ generation) codes,
+        // committed jointly; a pre-r12 generation keeps full-precision
+        // serving
+        val idx = IvfIndex.open(spark, g)
+        idx.append(batch, batchId)
         // informational (the delta overwrite is the idempotence); also
         // lets a replay skip the drift scan entirely
         Streams.writeAppliedBatches(fs, new Path(g), applied + batchId)
@@ -324,7 +312,7 @@ object IndexLifecycle {
           val committed = Similarity.readDeltaManifest(
             fsOf(spark, g), g).map(_.size).getOrElse(0)
           if (committed >= n)
-            Similarity.ivfIndexCompact(spark, g, mergedBatchId = -batchId - 1L)
+            idx.compact(mergedBatchId = -batchId - 1L)
         }
         false
       }
@@ -336,15 +324,13 @@ object IndexLifecycle {
     * codes (mSub bytes/vector resident) with exact re-rank against the
     * full-precision assignments, the s23 serving shape running on
     * streaming generations. A pre-r12 generation (no pqcodebook/) falls
-    * back to full-precision serving — the driftBase compat rule.
+    * back to full-precision serving; [[IvfIndex.open]] detects which.
     */
   def serve(spark: SparkSession, lcRoot: String, queries: DataFrame,
       k: Int): DataFrame = {
     val g = currentRoot(spark, lcRoot).getOrElse(
       throw new IllegalStateException(s"IndexLifecycle at $lcRoot not initialized"))
-    if (Similarity.hasPqShape(spark, g))
-      Similarity.ivfPqGenQuery(spark, g, queries, k)
-    else Similarity.ivfIndexQuery(spark, g, queries, k)
+    IvfIndex.open(spark, g).serve(queries, k)
   }
 
   /** Drive the lifecycle from a parquet stream of (vec_id, embedding)

@@ -1598,9 +1598,9 @@ object Streams {
       // many-small-jobs profile the scheduler overhead was a third of
       // the entry's wall
       def storeCounts(root: String): (Long, Long) = {
-        val r = Similarity.ivfIndexAssignments(s, root)
-          .agg(count(lit(1)).as("na"))
-          .crossJoin(Similarity.ivfPqCodes(s, root).agg(count(lit(1)).as("nc")))
+        val idx = Similarity.IvfIndex.open(s, root)
+        val r = idx.vectors.agg(count(lit(1)).as("na"))
+          .crossJoin(idx.codes.agg(count(lit(1)).as("nc")))
           .head()
         (r.getLong(0), r.getLong(1))
       }
@@ -1620,9 +1620,10 @@ object Streams {
       // the serve/brute/audit subtrees evaluate concurrently. The
       // mid-simulation probes above (nAfter1/nCodes1/replay) stay
       // EAGER by necessity: they observe state that later ticks mutate.
-      val finalStats = Similarity.ivfIndexAssignments(s, gen2)
+      val finalIdx = Similarity.IvfIndex.open(s, gen2)
+      val finalStats = finalIdx.vectors
         .agg(count(lit(1)).as("nf"), countDistinct(col("vid")).as("nd"))
-        .crossJoin(Similarity.ivfPqCodes(s, gen2)
+        .crossJoin(finalIdx.codes
           .agg(countDistinct(col("vid")).as("ncd"), max(size(col("code"))).as("w")))
         .crossJoin(e.agg(count(lit(1)).as("ncorp")))
       val q = drifted.filter(col("vec_id") < 32)
@@ -1685,25 +1686,23 @@ object Streams {
         .select(col("vec_id"),
           transform(col("embedding"), x => x + lit(0.75f)).as("embedding"))
       // the literal schedule, verdicts pinned: batch 1 appends
-      val idx0 = Similarity.ivfIndexBuildReplayable(base,
-        Similarity.deriveNlist(base.count()))
-      Similarity.ivfIndexAppendReplayable(s, idx0, undrifted, batchId = 1L)
+      val idx0 = Similarity.IvfIndex.build(base, Similarity.Quantizer.replayable(base))
+      idx0.append(undrifted, batchId = 1L)
       // batch 2 retrains: input = the OLD index's joint committed listing
       // ∪ the drifted batch (exactly IndexLifecycle.tick's retrain input)
-      val old = Similarity.ivfIndexAssignments(s, idx0)
+      val old = idx0.vectors
         .select(col("vid").as("vec_id"), col("ve").as("embedding"))
       val full = old.unionByName(drifted)
       // r20: ONE corpus count — it sizes nlist here and anchors the
       // every-vector-exactly-once audit below (was two identical jobs)
       val nCorpus = e.count()
-      val idx2 = Similarity.ivfIndexBuildReplayable(full,
-        Similarity.deriveNlist(nCorpus))
+      val idx2 = Similarity.IvfIndex.build(full,
+        Similarity.Quantizer.replayable(full, Some(Similarity.deriveNlist(nCorpus))))
       val q = drifted.filter(col("vec_id") < 32)
-      val served = Similarity.ivfIndexQueryReplayable(s, idx2, q, 5)
-        .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
+      val served = idx2.serve(q, 5)
       // final-state audit (st12's end-state law, here hash-backed too):
       // the retrained store holds every corpus vector exactly once
-      val audit = Similarity.ivfIndexAssignments(s, idx2)
+      val audit = idx2.vectors
         .groupBy(col("vid")).agg(count(lit(1)).as("c"))
         .agg(sum(when(col("c") =!= 1, 1L).otherwise(0L)).as("n_dup"),
           count(lit(1)).as("n_vec"))

@@ -109,12 +109,13 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(msgs(exA).exists(_.contains("graft_ann_topk(query_vec, k[, nprobe])")))
 
       // PLAIN index root: SQL ≡ the DataFrame API on the same root
-      val idx = graft.llm.Similarity.ivfIndexBuild(e)
+      val idx = graft.llm.Similarity.IvfIndex.build(e,
+        graft.llm.Similarity.Quantizer.sampled(e)).root
       spark.conf.set(GraftConfig.IndexRootKey, idx)
       val sqlRows = spark.sql(s"SELECT vid, sim FROM graft_ann_topk($vecSql, 5)")
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       import spark.implicits._
-      val apiRows = graft.llm.Similarity.ivfIndexQuery(spark, idx,
+      val apiRows = graft.llm.Similarity.IvfIndex.open(spark, idx).serve(
           Seq((-1L, qVec)).toDF("vec_id", "embedding"), 5)
         .select(col("vid"), col("sim"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -128,7 +129,7 @@ class GraftExtensionsSpec extends SparkSpec {
       // the NEXT query (fresh analysis) must see them, no re-wiring
       val boosted = e.filter(col("vec_id") === 7L)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-      graft.llm.Similarity.ivfIndexAppend(spark, idx, boosted, batchId = 1L)
+      graft.llm.Similarity.IvfIndex.open(spark, idx).append(boosted, batchId = 1L)
       val sqlRows2 = spark.sql(s"SELECT vid, sim FROM graft_ann_topk($vecSql, 5)")
         .collect().map(_.getLong(0)).toSet
       assert(sqlRows2.contains(100007L),
@@ -179,7 +180,8 @@ class GraftExtensionsSpec extends SparkSpec {
     try {
       val e = graft.llm.Similarity.clusteredEmbeddings(
         Tables.embeddings(spark, sf))
-      val idx = graft.llm.Similarity.ivfIndexBuild(e)
+      val idx = graft.llm.Similarity.IvfIndex.build(e,
+        graft.llm.Similarity.Quantizer.sampled(e)).root
       spark.conf.set(GraftConfig.IndexRootKey, idx)
       val queries = e.filter(col("vec_id") < 5L)
       queries.createOrReplaceTempView("ann_queries")
@@ -190,7 +192,7 @@ class GraftExtensionsSpec extends SparkSpec {
       val sqlRows = spark
         .sql("SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_queries', 5)")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val apiRows = graft.llm.Similarity.ivfIndexQuery(spark, idx, queries, 5)
+      val apiRows = graft.llm.Similarity.IvfIndex.open(spark, idx).serve(queries, 5)
         .select(col("qid"), col("vid"), col("sim"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(sqlRows === apiRows && sqlRows.nonEmpty,
@@ -249,7 +251,8 @@ class GraftExtensionsSpec extends SparkSpec {
     try {
       val e = graft.llm.Similarity.clusteredEmbeddings(
         Tables.embeddings(s2, sf))
-      val idx = graft.llm.Similarity.ivfIndexBuild(e)
+      val idx = graft.llm.Similarity.IvfIndex.build(e,
+        graft.llm.Similarity.Quantizer.sampled(e)).root
       s2.conf.set(GraftConfig.IndexRootKey, idx)
       // query ids OUTSIDE the corpus id space: the batch TVF's
       // vid == vec_id self-exclusion then never fires — the regime in
@@ -312,7 +315,8 @@ class GraftExtensionsSpec extends SparkSpec {
         .count() === 0L)
 
       // PQ-shaped root dispatches to the ADC + exact-re-rank path
-      val pq = graft.llm.Similarity.ivfPqIndexBuild(e)
+      val pq = graft.llm.Similarity.IvfIndex.build(e,
+        graft.llm.Similarity.Quantizer.sampled(e), codec = graft.llm.Similarity.Codec.Pq).root
       s2.conf.set(GraftConfig.IndexRootKey, pq)
       val batchPq = rows(s2.sql(
         "SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_q_lat', 5)"))
@@ -321,6 +325,19 @@ class GraftExtensionsSpec extends SparkSpec {
           "LATERAL graft_ann_topk(q.embedding, 5) t"))
       assert(latPq === batchPq && latPq.nonEmpty,
         "lateral must ride the PQ serving path on a PQ-shaped root")
+
+      // SQ8 root (one sq8/ store, no assignments/) serves on the rounded
+      // router: the SQL rows equal the DataFrame serve of the same root
+      val sq8 = java.nio.file.Files.createTempDirectory("ann-sq8").toString
+      graft.llm.Similarity.IvfIndex.build(e, graft.llm.Similarity.Quantizer.replayable(e),
+        Some(sq8), graft.llm.Similarity.Codec.Sq8)
+      s2.conf.set(GraftConfig.IndexRootKey, sq8)
+      val batchSq8 = rows(s2.sql(
+        "SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_q_lat', 5)"))
+      val apiSq8 = rows(graft.llm.Similarity.IvfIndex.openReplayable(s2, sq8)
+        .serve(s2.table("ann_q_lat"), 5))
+      assert(batchSq8 === apiSq8 && batchSq8.nonEmpty,
+        "SQL serving of an SQ8 root must equal the DataFrame serve")
 
       // LIFECYCLE root: analysis-time CURRENT-generation resolution —
       // a drift-triggered retrain cutover is visible to the NEXT query

@@ -311,7 +311,8 @@ class NewOpsPlanSpec extends SparkSpec {
   test("s22 purge: the rewrite scan reads ONLY tombstone-bearing cells (directory pruning)") {
     import org.apache.spark.sql.functions._
     val e = graft.llm.Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
-    val idx = graft.llm.Similarity.ivfIndexBuild(e)
+    val idx = graft.llm.Similarity.IvfIndex.build(e,
+      graft.llm.Similarity.Quantizer.sampled(e)).root
     // tombstone exactly one vector → its single cell is the whole
     // rewrite footprint
     val tomb = e.filter(col("vec_id") === 0).select("vec_id")
@@ -333,7 +334,7 @@ class NewOpsPlanSpec extends SparkSpec {
     assert(n.nonEmpty && n.head < allFiles,
       s"purge-shaped scan read ${n.headOption} of $allFiles files — no pruning")
     // and the purge itself leaves the index serving correctly
-    graft.llm.Similarity.ivfIndexPurge(spark, idx, tomb)
+    graft.llm.Similarity.IvfIndex.open(spark, idx).purge(tomb)
     assert(spark.read.parquet(s"$idx/assignments")
       .filter(col("vid") === 0).count() === 0L)
   }

@@ -437,6 +437,10 @@ class DedupSpec extends SparkSpec {
     val young = mk("cc-deadbeef-aaaa", 30)
     val old = mk("tok-deadbeef-bbbb", 180)
     val other = mk("user-data", 500)
+    // one 3-hour-old foreign run dir per prefix the pruner once missed
+    val missed = Seq("ivfrx", "ivflc", "ivfsq8", "bpelc", "cap", "fdoor",
+      "forget", "incartb", "incverb", "lmk", "lshdiag", "ph")
+      .map(p => mk(s"$p-deadbeef-cccc", 180))
     val prev = spark.conf.getOption(graft.GraftConfig.SpillTtlKey)
     try {
       // default TTL 60 min: only the 3-hour dir goes
@@ -444,6 +448,8 @@ class DedupSpec extends SparkSpec {
       assert(graft.GraftConfig.spillTtlMinutes(spark) === 60L)
       Dedup.pruneStaleRuns(spark, base)
       assert(young.exists() && !old.exists() && other.exists())
+      assert(missed.forall(!_.exists()),
+        s"stale foreign run dirs survived: ${missed.filter(_.exists()).map(_.getName)}")
       // tightened to 5 min via the documented conf key: the 30-minute
       // dir now goes too; unrelated dirs still untouched
       spark.conf.set(graft.GraftConfig.SpillTtlKey, "5")

@@ -95,7 +95,7 @@ class SimilaritySpec extends SparkSpec {
     val half = Similarity.nprobeForFraction(nl, 0.5)
     val brute = Similarity.bruteTopK(q, e, 5).select("qid", "vid")
       .as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(q, e, 5, nprobe = Some(half))
+    val ivf = Similarity.Quantizer.sampled(e).topK(q, e, 5, Some(half))
       .select("qid", "vid").as[(Long, Long)].collect().toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
     info(s"uniform-data IVF recall = $recall at explicit 50% scan (nprobe $half/$nl)")
@@ -110,7 +110,7 @@ class SimilaritySpec extends SparkSpec {
     val q = e.filter(col("vec_id") < 16)
     val brute = Similarity.bruteTopK(q, e, 5).select("qid", "vid")
       .as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(q, e, 5)
+    val ivf = Similarity.Quantizer.sampled(e).topK(q, e, 5)
       .select("qid", "vid").as[(Long, Long)].collect().toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
     val np = Similarity.deriveNprobe(Similarity.deriveNlist(e.count()))
@@ -149,12 +149,12 @@ class SimilaritySpec extends SparkSpec {
     val drifted = e.filter(pmod(col("vec_id"), lit(3)) === 2)
       .select(col("vec_id"),
         transform(col("embedding"), x => x + lit(0.75f)).as("embedding"))
-    val idx = Similarity.ivfIndexBuild(base)
+    val idx = Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base)).root
     val (idx1, r1) = Similarity.ivfAppendOrRetrain(spark, idx, undrifted, batchId = 1L)
     assert(!r1, "in-distribution append must not trigger a retrain")
     assert(idx1 === idx, "append keeps the index root")
     // batch appends live in the delta tree (r14) — read base ∪ deltas
-    val nAfterAppend = Similarity.ivfIndexAssignments(spark, idx1).count()
+    val nAfterAppend = Similarity.IvfIndex.open(spark, idx1).vectors.count()
     assert(nAfterAppend === base.count() + undrifted.count())
     val (idx2, r2) = Similarity.ivfAppendOrRetrain(spark, idx1, drifted, batchId = 2L)
     assert(r2, "drifted append must trigger a retrain")
@@ -165,7 +165,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rebuilt.select("vid").distinct().count() === e.count())
     // and the abandoned pre-retrain root is untouched (serving cutover,
     // not in-place mutation)
-    assert(Similarity.ivfIndexAssignments(spark, idx1).count() === nAfterAppend)
+    assert(Similarity.IvfIndex.open(spark, idx1).vectors.count() === nAfterAppend)
   }
 
   test("PQ-ADC: well-formed ranks, monotone distances, honest recall floor") {
@@ -353,7 +353,7 @@ class SimilaritySpec extends SparkSpec {
   test("knn graph: k rows per query, no self edges, sims within top-k of exact") {
     val e = Tables.embeddings(spark, sf)
     val n = e.count()
-    val out = Similarity.knnGraph(e, 3)
+    val out = Similarity.Quantizer.sampled(e).knnGraph(e, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect()
     val byQ = out.groupBy(_._1)
     assert(byQ.size === n, "every vector must appear as a query")
@@ -369,7 +369,7 @@ class SimilaritySpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val e = Tables.embeddings(spark, sf)
-      val df = Similarity.knnGraph(e, 3)
+      val df = Similarity.Quantizer.sampled(e).knnGraph(e, 3)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       // with broadcast off, the probes↔assigned meet must be a keyed
@@ -510,7 +510,7 @@ class SimilaritySpec extends SparkSpec {
   test("persisted IVF index: partition-pruned serving scan, lossless round-trip") {
     val e = Tables.embeddings(spark, sf)
     val q = e.filter(col("vec_id") < 4)
-    val idx = Similarity.ivfIndexBuild(e, cacheKey = Some(sf + "#spec"))
+    val idx = Similarity.IvfIndex.build(e, Similarity.Quantizer.sampled(e)).root
     // the assignments table is laid out by cell
     val cells = new java.io.File(s"$idx/assignments").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
@@ -518,7 +518,7 @@ class SimilaritySpec extends SparkSpec {
     // serving scan lists ONLY probed cells' files (directory pruning,
     // not a post-scan filter): with nprobe=1 the input files must be a
     // strict subset of the full table's
-    val served1 = Similarity.ivfIndexQuery(spark, idx, q, 3, nprobe = Some(1))
+    val served1 = Similarity.IvfIndex.open(spark, idx).serve(q, 3, nprobe = Some(1))
     served1.collect()
     val full = spark.read.parquet(s"$idx/assignments").inputFiles.length
     // inputFiles ignores partition pruning — read the actual file count
@@ -537,9 +537,9 @@ class SimilaritySpec extends SparkSpec {
     assert(pruned.nonEmpty && pruned.head < full,
       s"nprobe=1 scan must prune cell directories ($pruned vs $full files)")
     // round-trip losslessness at the default nprobe: persisted == fresh
-    val served = Similarity.ivfIndexQuery(spark, idx, q, 3)
+    val served = Similarity.IvfIndex.open(spark, idx).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
-    val fresh = Similarity.ivfTopK(q, e, 3, cacheKey = Some(sf + "#spec"))
+    val fresh = Similarity.Quantizer.sampled(e).topK(q, e, 3)
       .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
       .as[(Long, Long, Double)].collect().sorted
     assert(served.sameElements(fresh), "persisted index drifted from fresh index")
@@ -548,7 +548,8 @@ class SimilaritySpec extends SparkSpec {
   test("persisted IVF-PQ index: cell-pruned code scan, byte codes round-trip, recall, determinism") {
     val e = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
     val q = e.filter(col("vec_id") < 4)
-    val idx = Similarity.ivfPqIndexBuild(e, cacheKey = Some(sf + "#pqspec"))
+    val idx = Similarity.IvfIndex.build(e, Similarity.Quantizer.sampled(e),
+      codec = Similarity.Codec.Pq).root
     // layout: codes and vectors are cell-partitioned; pq codebook bounded
     val cellDirs = new java.io.File(s"$idx/codes").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
@@ -558,7 +559,7 @@ class SimilaritySpec extends SparkSpec {
       .sameElements(cellDirs), "codes and vectors must share the cell layout")
     // serving prunes the CODES scan at the directory level (numFiles off
     // the executed scan — inputFiles ignores partition pruning)
-    val served1 = Similarity.ivfPqIndexQuery(spark, idx, q, 3, nprobe = Some(1))
+    val served1 = Similarity.IvfIndex.open(spark, idx).serve(q, 3, nprobe = Some(1))
     served1.collect()
     val fullFiles = spark.read.parquet(s"$idx/codes").inputFiles.length
     def scans(p: org.apache.spark.sql.execution.SparkPlan,
@@ -587,10 +588,11 @@ class SimilaritySpec extends SparkSpec {
     // recall against brute force + build determinism (same targetless
     // build twice via cache bypass must serve identical rows)
     import spark.implicits._
-    val got = Similarity.ivfPqIndexQuery(spark, idx, q, 3)
+    val got = Similarity.IvfIndex.open(spark, idx).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
-    val idx2 = Similarity.ivfPqIndexBuild(e)
-    val got2 = Similarity.ivfPqIndexQuery(spark, idx2, q, 3)
+    val idx2 = Similarity.IvfIndex.build(e, Similarity.Quantizer.sampled(e),
+      codec = Similarity.Codec.Pq).root
+    val got2 = Similarity.IvfIndex.open(spark, idx2).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
     assert(got.sameElements(got2), "IVF-PQ build/serve must be deterministic")
     val exact = Similarity.bruteTopK(q, e, 3)
@@ -605,7 +607,7 @@ class SimilaritySpec extends SparkSpec {
     val e = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
     val q = e.filter(col("vec_id") < 4)
     val root = java.nio.file.Files.createTempDirectory("pqreplay").toString + "/idx"
-    Similarity.ivfPqIndexBuildReplayable(e, root)
+    Similarity.IvfIndex.build(e, Similarity.Quantizer.replayable(e), Some(root), Similarity.Codec.Pq)
     // same store layout as the production build: shared cell partitions,
     // mSub signed-byte codes
     val cellDirs = new java.io.File(s"$root/codes").listFiles()
@@ -617,7 +619,7 @@ class SimilaritySpec extends SparkSpec {
     val codeRow = spark.read.parquet(s"$root/codes").select("code").head()
     assert(codeRow.getSeq[Byte](0).length === Similarity.PqRegistryM)
     // the rounded-routing serve still prunes the code scan to probed cells
-    val served1 = Similarity.ivfPqIndexQueryReplayable(spark, root, q, 3,
+    val served1 = Similarity.IvfIndex.openReplayable(spark, root).serve(q, 3,
       nprobe = Some(1))
     served1.collect()
     def scans(p: org.apache.spark.sql.execution.SparkPlan,
@@ -637,11 +639,11 @@ class SimilaritySpec extends SparkSpec {
       s"nprobe=1 code scan must prune cell dirs ($prunedCodes vs $fullFiles)")
     // build+serve determinism: a second build to a fresh dir serves the
     // identical rows (the property the DuckDB oracle hash rides on)
-    val got = Similarity.ivfPqIndexQueryReplayable(spark, root, q, 3)
+    val got = Similarity.IvfIndex.openReplayable(spark, root).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
     val root2 = java.nio.file.Files.createTempDirectory("pqreplay2").toString + "/idx"
-    Similarity.ivfPqIndexBuildReplayable(e, root2)
-    val got2 = Similarity.ivfPqIndexQueryReplayable(spark, root2, q, 3)
+    Similarity.IvfIndex.build(e, Similarity.Quantizer.replayable(e), Some(root2), Similarity.Codec.Pq)
+    val got2 = Similarity.IvfIndex.openReplayable(spark, root2).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
     assert(got.sameElements(got2), "replayable IVF-PQ build/serve must be deterministic")
   }
@@ -651,7 +653,7 @@ class SimilaritySpec extends SparkSpec {
     val e = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
     val q = e.filter(col("vec_id") < 4)
     val root = java.nio.file.Files.createTempDirectory("sq8").toString + "/idx"
-    Similarity.ivfSq8IndexBuild(e, root)
+    Similarity.IvfIndex.build(e, Similarity.Quantizer.replayable(e), Some(root), Similarity.Codec.Sq8)
     // one cell-partitioned store; codes are exactly one byte per dim
     val cellDirs = new java.io.File(s"$root/sq8").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
@@ -669,7 +671,7 @@ class SimilaritySpec extends SparkSpec {
       .head().getDouble(0)
     assert(errs <= 0.5 + 1e-9, s"worst normalized reconstruction error $errs > 0.5")
     // the serve prunes the single store to the probed cell directories
-    val served1 = Similarity.ivfSq8IndexQuery(spark, root, q, 3, nprobe = Some(1))
+    val served1 = Similarity.IvfIndex.open(spark, root).serve(q, 3, nprobe = Some(1))
     served1.collect()
     def scans(p: org.apache.spark.sql.execution.SparkPlan,
         dir: String): Seq[Long] = (p match {
@@ -687,11 +689,11 @@ class SimilaritySpec extends SparkSpec {
     assert(pruned.nonEmpty && pruned.head < fullFiles,
       s"nprobe=1 SQ8 scan must prune cell dirs ($pruned vs $fullFiles)")
     // recall vs brute force on the fixture + build/serve determinism
-    val got = Similarity.ivfSq8IndexQuery(spark, root, q, 3)
+    val got = Similarity.IvfIndex.open(spark, root).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
     val root2 = java.nio.file.Files.createTempDirectory("sq8b").toString + "/idx"
-    Similarity.ivfSq8IndexBuild(e, root2)
-    val got2 = Similarity.ivfSq8IndexQuery(spark, root2, q, 3)
+    Similarity.IvfIndex.build(e, Similarity.Quantizer.replayable(e), Some(root2), Similarity.Codec.Sq8)
+    val got2 = Similarity.IvfIndex.open(spark, root2).serve(q, 3)
       .select("qid", "vid", "sim").as[(Long, Long, Double)].collect().sorted
     assert(got.sameElements(got2), "SQ8 build/serve must be deterministic")
     val exact = Similarity.bruteTopK(q, e, 3)
@@ -704,9 +706,10 @@ class SimilaritySpec extends SparkSpec {
     val withZero = e.select(col("vec_id"), col("embedding"))
       .unionByName(Seq((99999L, Array.fill(64)(0.0f))).toDF("vec_id", "embedding"))
     val zRoot = java.nio.file.Files.createTempDirectory("sq8z").toString + "/idx"
-    Similarity.ivfSq8IndexBuild(withZero, zRoot)
+    Similarity.IvfIndex.build(withZero, Similarity.Quantizer.replayable(withZero),
+      Some(zRoot), Similarity.Codec.Sq8)
     val zq = withZero.filter(col("vec_id") < 2)
-    val zSims = Similarity.ivfSq8IndexQuery(spark, zRoot, zq, 2000)
+    val zSims = Similarity.IvfIndex.open(spark, zRoot).serve(zq, 2000)
       .select("sim").as[Double].collect()
     assert(zSims.forall(s => !s.isNaN), "zero vector must never yield NaN")
   }
@@ -791,12 +794,12 @@ class SimilaritySpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf)
     val base = e.filter(pmod(col("vec_id"), lit(2)) === 0)
     val delta = e.filter(pmod(col("vec_id"), lit(2)) =!= 0)
-    val idx = Similarity.ivfIndexBuild(base)
+    val idx = Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base)).root
     val filesBefore = spark.read.parquet(s"$idx/assignments").inputFiles.toSet
-    Similarity.ivfIndexAppend(spark, idx, delta, batchId = 1L)
+    Similarity.IvfIndex.open(spark, idx).append(delta, batchId = 1L)
     // batch appends land in their own delta tree (r14) — serving reads
     // base ∪ committed deltas
-    val after = Similarity.ivfIndexAssignments(spark, idx)
+    val after = Similarity.IvfIndex.open(spark, idx).vectors
     assert(filesBefore.subsetOf(after.inputFiles.toSet),
       "append must only add files, never rewrite the base index")
     assert(after.count() === e.count(), "append must cover the full corpus")
@@ -814,7 +817,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf index purge: tombstones gone, survivors byte-identical, untouched cells' files untouched") {
     val e = Tables.embeddings(spark, sf)
-    val idx = Similarity.ivfIndexBuild(e)
+    val idx = Similarity.IvfIndex.build(e, Similarity.Quantizer.sampled(e)).root
     val tomb = e.filter(col("vec_id") % 7 === 0).select("vec_id")
     val before = spark.read.parquet(s"$idx/assignments")
     val survivorsBefore = before
@@ -828,7 +831,7 @@ class SimilaritySpec extends SparkSpec {
         .groupBy(f => f.substring(f.indexOf("cell=")).takeWhile(_ != '/'))
     val filesBefore = files()
 
-    Similarity.ivfIndexPurge(spark, idx, tomb)
+    Similarity.IvfIndex.open(spark, idx).purge(tomb)
 
     val after = spark.read.parquet(s"$idx/assignments")
     assert(after.join(tomb.select(col("vec_id").as("vid")), Seq("vid"), "left_semi")
@@ -844,7 +847,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // idempotent: purging the same tombstones again is a no-op
     val snapshot = files()
-    Similarity.ivfIndexPurge(spark, idx, tomb)
+    Similarity.IvfIndex.open(spark, idx).purge(tomb)
     assert(files() === snapshot, "re-purge of already-purged ids must not rewrite")
   }
 
@@ -855,10 +858,10 @@ class SimilaritySpec extends SparkSpec {
     // the intact cells without failing; once the marker is gone the
     // next read heals.
     val e = Tables.embeddings(spark, sf)
-    val idx = Similarity.ivfIndexBuild(e)
+    val idx = Similarity.IvfIndex.build(e, Similarity.Quantizer.sampled(e)).root
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val total = Similarity.ivfIndexAssignments(spark, idx).count()
+    val total = Similarity.IvfIndex.open(spark, idx).vectors.count()
     val cells = fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/assignments"))
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
       .map(_.getPath).sortBy(_.getName)
@@ -871,7 +874,7 @@ class SimilaritySpec extends SparkSpec {
     val marker = new org.apache.hadoop.fs.Path(s"$idx/__purge_inprogress")
     fs.create(marker).close()
     try {
-      val served = Similarity.ivfIndexAssignments(spark, idx)
+      val served = Similarity.IvfIndex.open(spark, idx).vectors
       assert(served.count() === total - victimRows,
         "marker-up reader must serve exactly the intact cells")
       assert(fs.exists(parked) && !fs.exists(victim),
@@ -879,7 +882,7 @@ class SimilaritySpec extends SparkSpec {
     } finally { fs.delete(marker, false); () }
     // marker gone (purge finished, or the next purge tick reclaimed a
     // stale one): the read-side heal restores the parked cell
-    assert(Similarity.ivfIndexAssignments(spark, idx).count() === total)
+    assert(Similarity.IvfIndex.open(spark, idx).vectors.count() === total)
     assert(!fs.exists(parked) && fs.exists(victim),
       "heal did not run after marker removal")
   }
@@ -931,11 +934,11 @@ class SimilaritySpec extends SparkSpec {
     assert(!IndexLifecycle.tick(spark, lcRoot,
       e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L))
     val g = IndexLifecycle.currentRoot(spark, lcRoot).get
-    assert(Similarity.hasPqShape(spark, g), "generation must carry the PQ shape")
+    assert(Similarity.IvfIndex.open(spark, g).isPq, "generation must carry the PQ shape")
     assert(new java.io.File(s"$g/codes_deltas/batch=1").exists,
       "delta tick must write a code delta")
     val q = e.filter(col("vec_id") < 4)
-    val served = Similarity.ivfPqGenQuery(spark, g, q, 3, nprobe = Some(1))
+    val served = Similarity.IvfIndex.open(spark, g).serve(q, 3, nprobe = Some(1))
     served.collect()
     def scans(p: org.apache.spark.sql.execution.SparkPlan,
         dir: String): Seq[Long] = (p match {
@@ -954,7 +957,7 @@ class SimilaritySpec extends SparkSpec {
       s"nprobe=1 generation code scan must prune cell dirs ($pruned vs $fullCodeFiles)")
     // and serving ≡ the full-precision answer class: every served pair
     // is a real vector pair (ids exist in the assignments)
-    val vids = Similarity.ivfIndexAssignments(spark, g)
+    val vids = Similarity.IvfIndex.open(spark, g).vectors
       .select("vid").as[Long].collect().toSet
     served.select("vid").as[Long].collect().foreach(v => assert(vids(v)))
   }
@@ -968,10 +971,10 @@ class SimilaritySpec extends SparkSpec {
     val base = e.filter(pmod(col("vec_id"), lit(3)) === 0)
     val delta = e.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val root = java.nio.file.Files.createTempDirectory("pqappend").toString + "/idx"
-    Similarity.ivfIndexBuild(base, targetDir = Some(root))
-    Similarity.pqAugmentIndex(spark, root, base)
-    Similarity.ivfIndexAppend(spark, root, delta, batchId = 1L)
-    val codes = Similarity.ivfPqCodes(spark, root)
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
+    Similarity.IvfIndex.open(spark, root).append(delta, batchId = 1L)
+    val codes = Similarity.IvfIndex.open(spark, root).codes
     assert(codes.select("vid").distinct().count() === e.count(),
       "appended vectors must be encoded into the code store")
     assert(codes.count() === e.count(), "append must not duplicate codes")
@@ -980,7 +983,7 @@ class SimilaritySpec extends SparkSpec {
     // so top-1 must be a real near neighbor with sim computed (and the
     // vector itself excluded by the vid != qid rule)
     val probe = delta.orderBy(col("vec_id")).limit(1)
-    val got = Similarity.ivfPqGenQuery(spark, root, probe, 3,
+    val got = Similarity.IvfIndex.open(spark, root).serve(probe, 3,
       nprobe = Some(2))
     assert(got.count() > 0, "ADC serving must see appended vectors' cells")
   }
@@ -993,19 +996,19 @@ class SimilaritySpec extends SparkSpec {
     val base = e.filter(pmod(col("vec_id"), lit(3)) === 0)
     val delta = e.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val root = java.nio.file.Files.createTempDirectory("appendreplay").toString + "/idx"
-    Similarity.ivfIndexBuild(base, targetDir = Some(root))
-    Similarity.pqAugmentIndex(spark, root, base)
-    Similarity.ivfIndexAppend(spark, root, delta, batchId = 7L)
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
+    Similarity.IvfIndex.open(spark, root).append(delta, batchId = 7L)
     def snapshot(): (Set[(Long, Int)], Set[(Long, Seq[Byte])]) = (
-      Similarity.ivfIndexAssignments(spark, root)
+      Similarity.IvfIndex.open(spark, root).vectors
         .select("vid", "cell").as[(Long, Int)].collect().toSet,
-      Similarity.ivfPqCodes(spark, root)
+      Similarity.IvfIndex.open(spark, root).codes
         .select(col("vid"), col("code")).as[(Long, Seq[Byte])].collect().toSet)
     val (vecs1, codes1) = snapshot()
     assert(vecs1.size === e.count(), "first append must cover the corpus")
     assert(codes1.size === e.count())
     // the replay: same batch, same id — crashed-and-retried bulk load
-    Similarity.ivfIndexAppend(spark, root, delta, batchId = 7L)
+    Similarity.IvfIndex.open(spark, root).append(delta, batchId = 7L)
     val (vecs2, codes2) = snapshot()
     assert(vecs2 === vecs1, "replayed append must be a row-level no-op on vectors")
     assert(codes2 === codes1, "replayed append must be a row-level no-op on codes")
@@ -1019,21 +1022,21 @@ class SimilaritySpec extends SparkSpec {
     val base = e.filter(pmod(col("vec_id"), lit(3)) === 0)
     val d1 = e.filter(pmod(col("vec_id"), lit(3)) === 1)
     val d2 = e.filter(pmod(col("vec_id"), lit(3)) === 2)
-    val idx = Similarity.ivfIndexBuildReplayable(base,
-      Similarity.deriveNlist(base.count()))
-    Similarity.ivfIndexAppendReplayable(spark, idx, d1, batchId = 1L)
-    Similarity.ivfIndexAppendReplayable(spark, idx, d2, batchId = 2L)
-    def rows(): Set[(Long, Int)] = Similarity.ivfIndexAssignments(spark, idx)
+    val idx = Similarity.IvfIndex.build(base,
+      Similarity.Quantizer.replayable(base, Some(Similarity.deriveNlist(base.count())))).root
+    Similarity.IvfIndex.openReplayable(spark, idx).append(d1, batchId = 1L)
+    Similarity.IvfIndex.openReplayable(spark, idx).append(d2, batchId = 2L)
+    def rows(): Set[(Long, Int)] = Similarity.IvfIndex.open(spark, idx).vectors
       .select("vid", "cell").as[(Long, Int)].collect().toSet
     val q = e.filter(col("vec_id") < 8)
     def served(): Set[(Long, Long, Double)] =
-      Similarity.ivfIndexQueryReplayable(spark, idx, q, 5)
+      Similarity.IvfIndex.openReplayable(spark, idx).serve(q, 5)
         .select(col("qid"), col("vid"), round(col("sim"), 6))
         .as[(Long, Long, Double)].collect().toSet
     val (r1, s1) = (rows(), served())
     assert(r1.size === e.count(), "both batches must be servable")
     // the replay: batch 2 re-runs under its own id after a "crash"
-    Similarity.ivfIndexAppendReplayable(spark, idx, d2, batchId = 2L)
+    Similarity.IvfIndex.openReplayable(spark, idx).append(d2, batchId = 2L)
     assert(rows() === r1, "replayed batch must be a row-level no-op")
     assert(served() === s1, "replayed batch must not change a served row")
   }
@@ -1048,14 +1051,14 @@ class SimilaritySpec extends SparkSpec {
     val base = e.filter(pmod(col("vec_id"), lit(3)) === 0)
     val delta = e.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val root = java.nio.file.Files.createTempDirectory("tornappend").toString + "/idx"
-    Similarity.ivfIndexBuild(base, targetDir = Some(root))
-    Similarity.pqAugmentIndex(spark, root, base)
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
     val nBase = base.count()
     // the crash: vectors landed and committed, codes never written
-    Similarity.ivfIndexAppendDelta(spark, root, delta, batchId = 3L)
-    assert(Similarity.ivfIndexAssignments(spark, root).count() === nBase,
+    Similarity.IvfIndex.open(spark, root).writeVectorDelta(delta, batchId = 3L)
+    assert(Similarity.IvfIndex.open(spark, root).vectors.count() === nBase,
       "half-committed batch must be invisible to the re-rank store")
-    assert(Similarity.ivfPqCodes(spark, root).count() === nBase,
+    assert(Similarity.IvfIndex.open(spark, root).codes.count() === nBase,
       "half-committed batch must be invisible to the code store")
     // r14 ADVICE: the torn batch is DETECTED (the purge warns off this
     // listing — RTBF campaigns must not silently leave data pending)
@@ -1063,21 +1066,21 @@ class SimilaritySpec extends SparkSpec {
       "half-committed batch must surface in the torn listing")
     // a purge over the torn index is safe: it skips (and warns about)
     // the torn batch, whose on-disk rows survive for their replay
-    Similarity.ivfIndexPurge(spark, root,
+    Similarity.IvfIndex.open(spark, root).purge(
       Seq(-999L).toDF("vec_id"))
     assert(Similarity.tornDeltaBatches(spark, root) === Seq("batch=3"),
       "purge must leave the torn batch to its replay")
     val probe = base.orderBy(col("vec_id")).limit(1)
-    assert(Similarity.ivfPqGenQuery(spark, root, probe, 3, nprobe = Some(2)).count() > 0,
+    assert(Similarity.IvfIndex.open(spark, root).serve(probe, 3, nprobe = Some(2)).count() > 0,
       "serving must still answer over the base index")
     // the recovery: the batch's replay overwrites both dirs whole and
     // the joint gate opens — every vector exactly once, codes beside it
-    Similarity.ivfIndexAppend(spark, root, delta, batchId = 3L)
-    val after = Similarity.ivfIndexAssignments(spark, root)
+    Similarity.IvfIndex.open(spark, root).append(delta, batchId = 3L)
+    val after = Similarity.IvfIndex.open(spark, root).vectors
     assert(after.count() === e.count(), "replay must complete the batch")
     assert(after.select("vid").distinct().count() === e.count(),
       "replay must not duplicate any vector")
-    assert(Similarity.ivfPqCodes(spark, root).count() === e.count(),
+    assert(Similarity.IvfIndex.open(spark, root).codes.count() === e.count(),
       "replay must land codes for every vector exactly once")
   }
 
@@ -1090,26 +1093,26 @@ class SimilaritySpec extends SparkSpec {
     val base = e.filter(pmod(col("vec_id"), lit(3)) === 0)
     val delta = e.filter(pmod(col("vec_id"), lit(3)) =!= 0)
     val root = java.nio.file.Files.createTempDirectory("pqretrofit").toString + "/idx"
-    Similarity.ivfIndexBuild(base, targetDir = Some(root))
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
     // batch append BEFORE the index has a PQ shape (vectors only)
-    Similarity.ivfIndexAppend(spark, root, delta, batchId = 5L)
-    assert(Similarity.ivfIndexAssignments(spark, root).count() === e.count())
+    Similarity.IvfIndex.open(spark, root).append(delta, batchId = 5L)
+    assert(Similarity.IvfIndex.open(spark, root).vectors.count() === e.count())
     // the retrofit: codebook trained on the BASE-resident corpus
-    Similarity.pqAugmentIndex(spark, root, base)
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
     // the joint gate must still see the pre-augment batch in BOTH stores
-    val assigned = Similarity.ivfIndexAssignments(spark, root)
+    val assigned = Similarity.IvfIndex.open(spark, root).vectors
     assert(assigned.count() === e.count(),
       "retrofit must not hide pre-augment vector batches")
-    val codes = Similarity.ivfPqCodes(spark, root)
+    val codes = Similarity.IvfIndex.open(spark, root).codes
     assert(codes.count() === e.count(), "every vector gets exactly one code")
     assert(codes.select("vid").distinct().count() === e.count())
     // an appended vector is ADC-servable through the retrofit codes
     val probe = delta.orderBy(col("vec_id")).limit(1)
-    assert(Similarity.ivfPqGenQuery(spark, root, probe, 3, nprobe = Some(2)).count() > 0)
+    assert(Similarity.IvfIndex.open(spark, root).serve(probe, 3, nprobe = Some(2)).count() > 0)
     // and the batch's replay remains a row-level no-op on both stores
-    Similarity.ivfIndexAppend(spark, root, delta, batchId = 5L)
-    assert(Similarity.ivfIndexAssignments(spark, root).count() === e.count())
-    assert(Similarity.ivfPqCodes(spark, root).count() === e.count())
+    Similarity.IvfIndex.open(spark, root).append(delta, batchId = 5L)
+    assert(Similarity.IvfIndex.open(spark, root).vectors.count() === e.count())
+    assert(Similarity.IvfIndex.open(spark, root).codes.count() === e.count())
   }
 
   test("committed-batch manifest: one read == joint listing, torn excluded, recovery converges") {
@@ -1123,9 +1126,9 @@ class SimilaritySpec extends SparkSpec {
     val d2 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
     val d3 = e.filter(pmod(col("vec_id"), lit(4)) === 3)
     val root = java.nio.file.Files.createTempDirectory("dmanifest").toString + "/idx"
-    Similarity.ivfIndexBuild(base, targetDir = Some(root))
-    Similarity.ivfIndexAppend(spark, root, d1, batchId = 1L)
-    Similarity.ivfIndexAppend(spark, root, d2, batchId = 2L)
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
+    Similarity.IvfIndex.open(spark, root).append(d1, batchId = 1L)
+    Similarity.IvfIndex.open(spark, root).append(d2, batchId = 2L)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     def manifest(): Seq[String] =
@@ -1136,32 +1139,32 @@ class SimilaritySpec extends SparkSpec {
     assert(manifest() === Seq("batch=1", "batch=2"))
     assert(manifest() === listing(), "manifest must equal the joint listing")
     // PQ augment rebuilds the manifest under the twin rule — still equal
-    Similarity.pqAugmentIndex(spark, root, base)
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
     assert(manifest() === listing(), "retrofit must converge the manifest")
-    val nVisible = Similarity.ivfIndexAssignments(spark, root).count()
+    val nVisible = Similarity.IvfIndex.open(spark, root).vectors.count()
     assert(nVisible === base.count() + d1.count() + d2.count())
     // torn batch (vectors committed, codes twin never written): the
     // LISTING excludes it via the twin probe; the MANIFEST excludes it
     // because the joint commit point was never reached — same verdict
-    Similarity.ivfIndexAppendDelta(spark, root, d3, batchId = 9L)
+    Similarity.IvfIndex.open(spark, root).writeVectorDelta(d3, batchId = 9L)
     assert(!listing().contains("batch=9"), "twin gate must exclude the torn batch")
     assert(!manifest().contains("batch=9"), "unrecorded batch must stay invisible")
-    assert(Similarity.ivfIndexAssignments(spark, root).count() === nVisible)
+    assert(Similarity.IvfIndex.open(spark, root).vectors.count() === nVisible)
     assert(Similarity.tornDeltaBatches(spark, root) === Seq("batch=9"))
     // recovery path: with the manifest deleted, readers serve IDENTICAL
     // rows off the listing
-    val withManifest = Similarity.ivfIndexAssignments(spark, root)
+    val withManifest = Similarity.IvfIndex.open(spark, root).vectors
       .select("vid").collect().map(_.getLong(0)).sorted.toSeq
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/__delta_manifest"), false)
-    val offListing = Similarity.ivfIndexAssignments(spark, root)
+    val offListing = Similarity.IvfIndex.open(spark, root).vectors
       .select("vid").collect().map(_.getLong(0)).sorted.toSeq
     assert(withManifest === offListing, "recovery listing must serve the same rows")
     // the next commit converges the manifest back to the listing's truth
     // (and completes batch 9's replay through the joint path)
-    Similarity.ivfIndexAppend(spark, root, d3, batchId = 9L)
+    Similarity.IvfIndex.open(spark, root).append(d3, batchId = 9L)
     assert(manifest() === Seq("batch=1", "batch=2", "batch=9"))
     assert(manifest() === listing())
-    assert(Similarity.ivfIndexAssignments(spark, root).count() === e.count())
+    assert(Similarity.IvfIndex.open(spark, root).vectors.count() === e.count())
   }
 
   test("delta compaction: content identical, one batch left, torn replay survives, crash-safe") {
@@ -1174,23 +1177,23 @@ class SimilaritySpec extends SparkSpec {
     val d2 = e.filter(pmod(col("vec_id"), lit(4)) === 2)
     val d3 = e.filter(pmod(col("vec_id"), lit(4)) === 3)
     val root = java.nio.file.Files.createTempDirectory("dcompact").toString + "/idx"
-    Similarity.ivfIndexBuild(base, targetDir = Some(root))
-    Similarity.pqAugmentIndex(spark, root, base)
-    Similarity.ivfIndexAppend(spark, root, d1, batchId = 1L)
-    Similarity.ivfIndexAppend(spark, root, d2, batchId = 2L)
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
+    Similarity.IvfIndex.open(spark, root).append(d1, batchId = 1L)
+    Similarity.IvfIndex.open(spark, root).append(d2, batchId = 2L)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    def rows() = Similarity.ivfIndexAssignments(spark, root)
+    def rows() = Similarity.IvfIndex.open(spark, root).vectors
       .select(col("vid"), col("cell")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    def codeRows() = Similarity.ivfPqCodes(spark, root)
+    def codeRows() = Similarity.IvfIndex.open(spark, root).codes
       .select(col("vid")).collect().map(_.getLong(0)).sorted.toSeq
     val before = rows(); val codesBefore = codeRows()
     // fresh-id contract is loud
     intercept[IllegalArgumentException] {
-      Similarity.ivfIndexCompact(spark, root, mergedBatchId = 2L)
+      Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 2L)
     }
-    Similarity.ivfIndexCompact(spark, root, mergedBatchId = 100L)
+    Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 100L)
     assert(rows() === before, "compaction must not change served vectors")
     assert(codeRows() === codesBefore, "compaction must not change served codes")
     assert(Similarity.readDeltaManifest(fs, root).get === Seq("batch=100"))
@@ -1200,43 +1203,43 @@ class SimilaritySpec extends SparkSpec {
         s"$store must hold exactly the merged batch")
     // a TORN batch (vectors committed, codes never written) rides through:
     // invisible before AND after compaction, and its replay completes it
-    Similarity.ivfIndexAppendDelta(spark, root, d3, batchId = 3L)
+    Similarity.IvfIndex.open(spark, root).writeVectorDelta(d3, batchId = 3L)
     val mid = rows()
     assert(mid === before, "torn batch must stay invisible")
-    Similarity.ivfIndexCompact(spark, root, mergedBatchId = 101L)
+    Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 101L)
     assert(rows() === before, "compaction must not surface or lose the torn batch")
-    Similarity.ivfIndexAppend(spark, root, d3, batchId = 3L) // the replay
+    Similarity.IvfIndex.open(spark, root).append(d3, batchId = 3L) // the replay
     assert(rows().size === e.count(), "replay after compaction completes the batch")
     // crash between merged-write and manifest flip: simulate by writing a
     // merged dir WITHOUT flipping — readers must be unaffected, and the
     // re-run converges (overwrites the stale merged dir, then flips)
     val preCrash = rows()
-    val stale = Similarity.ivfIndexAssignments(spark, root)
+    val stale = Similarity.IvfIndex.open(spark, root).vectors
       .filter(col("cell") >= 0) // all rows — content irrelevant, must be overwritten
     stale.select(col("vid"), col("ve"), col("cell")).limit(3)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$root/deltas/batch=102")
     assert(rows() === preCrash, "unrecorded merged dir must be invisible")
-    Similarity.ivfIndexCompact(spark, root, mergedBatchId = 102L)
+    Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 102L)
     assert(rows() === preCrash, "re-run with the crashed id must converge")
     assert(Similarity.readDeltaManifest(fs, root).get === Seq("batch=102"))
     // crash between flip and sweep: a committed-but-unlisted garbage dir
     // remains — readers never open it, and the next compaction's sweep
     // (the ≤1-batch no-op path) removes it
     val garbage = new org.apache.hadoop.fs.Path(s"$root/deltas/batch=55")
-    Similarity.ivfIndexAssignments(spark, root).limit(2)
+    Similarity.IvfIndex.open(spark, root).vectors.limit(2)
       .select(col("vid"), col("ve"), col("cell"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(garbage.toString)
     assert(rows() === preCrash, "committed-but-unlisted garbage must be invisible")
-    Similarity.ivfIndexCompact(spark, root, mergedBatchId = 103L)
+    Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 103L)
     assert(!fs.exists(garbage), "the no-op sweep must remove unlisted garbage")
     assert(rows() === preCrash)
     // single-writer contract: compaction refuses under a purge marker
     fs.create(new org.apache.hadoop.fs.Path(s"$root/__purge_inprogress"), true).close()
     try {
       val e2 = intercept[IllegalArgumentException] {
-        Similarity.ivfIndexCompact(spark, root, mergedBatchId = 104L)
+        Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 104L)
       }
       assert(e2.getMessage.contains("purge"))
     } finally {
@@ -1261,15 +1264,15 @@ class SimilaritySpec extends SparkSpec {
     val g = IndexLifecycle.currentRoot(spark, lcRoot).get
     // in-distribution delta tick (clustered fixture, no drift)
     assert(!IndexLifecycle.tick(spark, lcRoot, delta, 1L), "delta tick must not cut over")
-    val before = Similarity.ivfPqCodes(spark, g)
+    val before = Similarity.IvfIndex.open(spark, g).codes
       .select(col("vid"), col("code")).as[(Long, Seq[Byte])].collect().toMap
     val nAll = before.size
     // tombstones: one base-resident vid, one delta-resident vid
     val baseVid = base.select(min(col("vec_id"))).head().getLong(0)
     val deltaVid = delta.select(min(col("vec_id"))).head().getLong(0)
     val tomb = Seq(baseVid, deltaVid).toDF("vid")
-    Similarity.ivfIndexPurge(spark, g, tomb)
-    val after = Similarity.ivfPqCodes(spark, g)
+    Similarity.IvfIndex.open(spark, g).purge(tomb)
+    val after = Similarity.IvfIndex.open(spark, g).codes
       .select(col("vid"), col("code")).as[(Long, Seq[Byte])].collect().toMap
     assert(!after.contains(baseVid) && !after.contains(deltaVid),
       "tombstoned vids must leave the code stores")
@@ -1278,7 +1281,7 @@ class SimilaritySpec extends SparkSpec {
       assert(code === before(vid), s"survivor $vid code changed")
     }
     // the full-precision side purged too, and serving still works
-    val asg = Similarity.ivfIndexAssignments(spark, g)
+    val asg = Similarity.IvfIndex.open(spark, g).vectors
       .select(col("vid")).as[Long].collect().toSet
     assert(!asg.contains(baseVid) && !asg.contains(deltaVid))
     val q = e.filter(col("vec_id") < 8 && col("vec_id") =!= baseVid

@@ -451,7 +451,7 @@ class StreamsSpec extends SparkSpec {
     // the drifted batch must have cut over to a retrain generation
     val gen = IndexLifecycle.currentRoot(spark, lcRoot).get
     assert(gen.endsWith("gen-b1"), s"expected retrain generation, serving $gen")
-    val asg = Similarity.ivfIndexAssignments(spark, gen)
+    val asg = Similarity.IvfIndex.open(spark, gen).vectors
     assert(asg.count() === e.count())
     assert(asg.select("vid").distinct().count() === e.count(),
       "every vector exactly once after cutover")
@@ -464,9 +464,9 @@ class StreamsSpec extends SparkSpec {
       "batch 0 must have encoded a code delta beside the vector delta")
     // the retrain generation carries the full PQ serving shape and its
     // code store covers the absorbed corpus exactly
-    assert(Similarity.hasPqShape(spark, gen),
+    assert(Similarity.IvfIndex.open(spark, gen).isPq,
       "retrain generation must carry pqcodebook + codes")
-    assert(Similarity.ivfPqCodes(spark, gen)
+    assert(Similarity.IvfIndex.open(spark, gen).codes
       .select("vid").distinct().count() === e.count(),
       "generation code store must cover every vector after cutover")
     // retention policy: reclaim deletes the dead generation, never the
@@ -509,7 +509,7 @@ class StreamsSpec extends SparkSpec {
     q2.awaitTermination(120000)
     assert(IndexLifecycle.currentRoot(spark, lcRoot).get === gen,
       "replay must not cut over again")
-    val asg2 = Similarity.ivfIndexAssignments(spark, gen)
+    val asg2 = Similarity.IvfIndex.open(spark, gen).vectors
     assert(asg2.count() === e.count() &&
       asg2.select("vid").distinct().count() === e.count(),
       "replayed ticks must not duplicate assignments")
@@ -561,13 +561,13 @@ class StreamsSpec extends SparkSpec {
     val listed = Similarity.readDeltaManifest(fs, gComp).get
     assert(listed.size < 3, s"compaction must bound the batch set, got $listed")
     // unobservable: both lifecycles serve the same assignment content...
-    def rows(g: String) = Similarity.ivfIndexAssignments(spark, g)
+    def rows(g: String) = Similarity.IvfIndex.open(spark, g).vectors
       .select(col("vid"), col("cell")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(rows(gComp) === rows(gPlain),
       "compaction must not change the served vector set")
     val nCovered = e.filter(col("vec_id") % 5 < 4).count()
-    assert(Similarity.ivfPqCodes(spark, gComp).select("vid").distinct().count()
+    assert(Similarity.IvfIndex.open(spark, gComp).codes.select("vid").distinct().count()
       === nCovered, "code store must cover every ingested vector through compactions")
     // ...and the same top-k
     val probes = e.filter(col("vec_id") < 16)
