@@ -68,7 +68,7 @@ object Analog {
     // reference's alias quirk (click AND view both map to cnt_engage, like
     // the four sewer statuses → qty_sewer) and terminal status ('error' ≈
     // 'Complete' → cnt_error_total, no station column). Exercises P6 no-op
-    // filter, J3 dict lookup ×2, A2 pivot deltas, A3 terminal counter, and
+    // filter, J3 dict lookup ×2, A2 summed CASE deltas, A3 terminal counter, and
     // the same-column-overwrite quirk.
     sql("ep2_process_movement",
       """WITH seq AS (
@@ -98,18 +98,15 @@ object Analog {
         "click" -> "cnt_engage", "view" -> "cnt_engage",
         "purchase" -> "cnt_buy", "signup" -> "cnt_signup"))
       val cols = Seq("cnt_engage", "cnt_buy", "cnt_signup", "cnt_error_total")
+      val sums = ProcessMovement.deltaSums(dict, col("prev"), col("curr"), "error",
+        "cnt_error_total", cols).zip(cols).map { case (d, c) => d.as(c) }
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       Tables.events(s, d)
         .select(col("user_id"), col("event_type").as("curr"),
           lag(col("event_type"), 1).over(w).as("prev"))
         .filter(col("prev").isNotNull && col("prev") =!= col("curr"))
-        .select(col("user_id"),
-          explode(ProcessMovement.deltaEntriesFor(
-            dict, col("prev"), col("curr"), "error", "cnt_error_total")).as("e"))
         .groupBy(col("user_id"))
-        .pivot("e.station", cols)
-        .agg(sum(col("e.delta")))
-        .na.fill(0L, cols)
+        .agg(sums.head, sums.tail: _*)
     },
 
     // ---- EP3: transformToSimpleRecords over the canonical fixture --------

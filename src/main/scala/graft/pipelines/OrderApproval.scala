@@ -1,10 +1,8 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-import graft.core.Envelope
 import graft.core.Envelope.{intOrZero, v}
 
 /** EP1 — order-approval stock transfer (reference: routes/makeRouter.js:78-134).
@@ -22,9 +20,9 @@ import graft.core.Envelope.{intOrZero, v}
   *    PUTs applied (non-atomic). We validate first and split violations to
   *    a dead-letter output — no partial application.
   *
-  * Scale: order events shuffle only for the per-event dedup window
-  * (partitioned by event × inventory key — high cardinality); the merge is
-  * one keyed outer join with NO broadcast hints — every join side here is
+  * Scale: a webhook's dedup runs on its own row (array functions over the
+  * subtable), so order events shuffle only for the per-key delta sum; the
+  * merge is one keyed outer join with NO broadcast hints — every join side here is
   * batch-derived, and AQE broadcast-converts while a side is actually
   * small instead of the hint forcing driver materialization at any
   * cardinality.
@@ -36,49 +34,48 @@ object OrderApproval {
       violations: DataFrame,  // line items rejected by the stock constraint
       missing: DataFrame)     // line items whose inventory_id has no record (Kintone 404 path)
 
-  /** Flatten approved order webhooks to candidate transfer rows.
-    * `events` needs an `event_id` column plus the parsed `record` struct
-    * (Envelope.orderWebhookSchema).
+  /** P4 gate + P5 required-field skip (makeRouter.js:81-96), inside each
+    * approved webhook's subtable array: `(line_no, inventory_id,
+    * bag_model, qty)` structs for the rows that pass, where `line_no` is
+    * the row's position in the original subtable.
     */
-  /** P4 gate + F1 explode + P5 required-field skip (makeRouter.js:81-96).
-    * `line_no` preserves subtable position for the first-wins dedup order.
-    */
-  private def lineItemsRaw(events: DataFrame): DataFrame =
+  private def validItems(events: DataFrame): DataFrame =
     events
       // P4: silent status gate (makeRouter.js:81)
       .filter(v(col("record.Status")) === "Approved")
-      // F1: subtable explode, keeping subtable position for first-wins order
-      .select(col("event_id"),
-        posexplode(v(col("record.order_details_table_website"))).as(Seq("line_no", "item")))
-      .select(col("event_id"), col("line_no"),
-        v(col("item.value.inventory_id")).as("inventory_id"),
-        v(col("item.value.bag_model_website")).as("bag_model"),
-        intOrZero(v(col("item.value.qty_website"))).as("qty"))
-      // P5: skip rows missing key fields or with falsy qty (0 dropped, as
-      // the reference's `!qty` does — makeRouter.js:94-96)
-      .filter(
-        col("inventory_id").isNotNull && col("inventory_id") =!= "" &&
-          col("bag_model").isNotNull && col("bag_model") =!= "" &&
-          col("qty") =!= 0)
+      .select(col("event_id"), filter(
+        transform(v(col("record.order_details_table_website")), (item, i) => struct(
+          i.as("line_no"),
+          v(item("value")("inventory_id")).as("inventory_id"),
+          v(item("value")("bag_model_website")).as("bag_model"),
+          intOrZero(v(item("value")("qty_website"))).as("qty"))),
+        // P5: skip rows missing key fields or with falsy qty (0 dropped, as
+        // the reference's `!qty` does — makeRouter.js:94-96)
+        it => it("inventory_id").isNotNull && it("inventory_id") =!= "" &&
+          it("bag_model").isNotNull && it("bag_model") =!= "" && it("qty") =!= 0)
+        .as("items"))
+
+  /** One row per array element: F1 subtable explode. */
+  private def flat(items: DataFrame): DataFrame =
+    items.select(col("event_id"), inline(col("items")))
 
   /** D1: first-wins dedup by inventory_id within each webhook, in subtable
     * order (makeRouter.js:86,99-101,127). Faithful to the reference bug:
-    * later duplicate rows are dropped entirely, NOT accumulated.
+    * later duplicate rows are dropped entirely, NOT accumulated. A
+    * webhook is one row, so the dedup is an array filter on that row —
+    * an item survives when its key's first occurrence among the valid
+    * items is its own position — and needs no shuffle.
     */
-  def lineItems(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("event_id"), col("inventory_id")).orderBy(col("line_no"))
-    lineItemsRaw(events)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  def lineItems(events: DataFrame): DataFrame =
+    flat(validItems(events).select(col("event_id"), filter(col("items"), (it, i) =>
+      array_position(col("items.inventory_id"), it("inventory_id")) === i + 1).as("items")))
 
   /** Corrected-variant dedup (SURVEY §2.5 D1 note): accumulate duplicate
     * SKU rows instead of dropping them — the "fixed" semantics shipped
     * alongside the faithful one.
     */
   def lineItemsAccumulating(events: DataFrame): DataFrame =
-    lineItemsRaw(events)
+    flat(validItems(events))
       .groupBy(col("event_id"), col("inventory_id"))
       .agg(min(col("line_no")).as("line_no"),
         // min_by, not first: first() in an unordered groupBy is
@@ -107,24 +104,22 @@ object OrderApproval {
     // Analog pattern).
     val joined = inventory.join(deltas, Seq("inventory_id"), "left")
 
-    // P7: stock constraint — validated atomically BEFORE any update.
-    val violating = joined
-      .filter(col("delta").isNotNull && col("general_stock_qty") < col("delta"))
+    // P7: stock constraint — validated atomically BEFORE any update. The
+    // join is one row per inventory key, so the check is a per-row
+    // predicate (a null stock never violates, as a filter drops null).
+    val violates = col("delta").isNotNull && col("general_stock_qty") < col("delta")
+    val violating = joined.filter(violates)
       .select(col("inventory_id"), col("general_stock_qty"), col("delta"))
-    val violatingKeys = violating.select("inventory_id")
 
     // A1: the transfer — general_stock_qty -= qty; qty_office += qty.
-    // violatingKeys is batch-derived too — same no-hint discipline.
-    val applied = joined
-      .join(violatingKeys.withColumn("__viol", lit(true)), Seq("inventory_id"), "left")
-      .withColumn("__apply", col("delta").isNotNull && col("__viol").isNull)
-      .withColumn("general_stock_qty",
-        when(col("__apply"), col("general_stock_qty") - col("delta"))
-          .otherwise(col("general_stock_qty")))
-      .withColumn("qty_office",
-        when(col("__apply"), col("qty_office") + col("delta"))
-          .otherwise(col("qty_office")))
-      .drop("delta", "__viol", "__apply")
+    val transfer = col("delta").isNotNull && !coalesce(violates, lit(false))
+    val applied = joined.select(joined.columns.filter(_ != "delta").toIndexedSeq.map {
+      case "general_stock_qty" => when(transfer, col("general_stock_qty") - col("delta"))
+        .otherwise(col("general_stock_qty")).as("general_stock_qty")
+      case "qty_office" => when(transfer, col("qty_office") + col("delta"))
+        .otherwise(col("qty_office")).as("qty_office")
+      case c => col(c)
+    }: _*)
 
     Result(applied, violating, missing)
   }

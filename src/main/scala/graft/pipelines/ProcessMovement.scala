@@ -24,7 +24,7 @@ import graft.core.Envelope.v
   * SAME column (e.g. `Need Sewer Assigned` → `With Sewer`, both
   * `qty_sewer`), the reference's second `update[col] = cur + 1` overwrites
   * the first `update[col] = cur - 1` — net effect +1, not 0
-  * (makeRouter.js:178-189). `deltas` encodes that overwrite.
+  * (makeRouter.js:178-189). [[deltaSums]] encodes that overwrite.
   */
 object ProcessMovement {
 
@@ -59,37 +59,32 @@ object ProcessMovement {
       v(col("record.Status")).as("status"),
       v(col("record.Previous_Status")).as("previous_status"))
 
-  /** Per-event station deltas (array of `(station, delta)` entries) for an
-    * arbitrary status→column dictionary: J3 lookup ×2 + A2/A3 counter
-    * updates, with the same-column-overwrite quirk. Parameterized so the
-    * same counter state machine runs over any keyed transition stream.
+  /** Per-counter delta sums of a transition stream, one aggregate column
+    * per name in `counters`, for an arbitrary status→column dictionary:
+    * J3 lookup ×2 + A2/A3 counter updates, with the same-column-overwrite
+    * quirk — the CASE form the `ep2_process_movement` oracle SQL uses.
+    * Parameterized so the same counter state machine runs over any keyed
+    * transition stream (the Analog ep2 entry); put it in one
+    * `groupBy(key).agg`.
     *
     * @param dict           status → counter column (typedLit map)
-    * @param terminalStatus the status that increments [[terminalCol]]
+    * @param terminalStatus the status that increments `terminalCol`
     *                       instead of a station column ('Complete' in the
     *                       reference)
     */
-  def deltaEntriesFor(dict: Column, prev: Column, curr: Column,
-      terminalStatus: String, terminalCol: String): Column = {
+  def deltaSums(dict: Column, prev: Column, curr: Column,
+      terminalStatus: String, terminalCol: String, counters: Seq[String]): Seq[Column] = {
     val prevCol = element_at(dict, prev)
     val currCol = element_at(dict, curr)
-    filter(
-      array(
-        // prev decrement — suppressed when curr targets the same column
-        // (the reference's update-object overwrite, makeRouter.js:180-189)
-        when(prevCol.isNotNull && (currCol.isNull || prevCol =!= currCol),
-          struct(prevCol.as("station"), lit(-1L).as("delta"))),
-        when(currCol.isNotNull,
-          struct(currCol.as("station"), lit(1L).as("delta"))),
-        when(curr === terminalStatus,
-          struct(lit(terminalCol).as("station"), lit(1L).as("delta")))),
-      e => e.isNotNull)
+    // prev decrement — suppressed when curr targets the same column (the
+    // reference's update-object overwrite, makeRouter.js:180-189)
+    val dec = prevCol.isNotNull && (currCol.isNull || prevCol =!= currCol)
+    def one(p: Column): Column = when(p, 1L).otherwise(0L)
+    counters.map { c =>
+      val terminal = if (c == terminalCol) one(curr === terminalStatus) else lit(0L)
+      sum(one(currCol === c) - one(dec && prevCol === c) + terminal)
+    }
   }
-
-  /** The bag-manufacturing instance of [[deltaEntriesFor]]. */
-  def deltaEntries: Column =
-    deltaEntriesFor(statusToCol, col("previous_status"), col("status"),
-      "Complete", "qty_completed")
 
   /** Apply a batch of movement events to a flat inventory snapshot. */
   def apply(events: DataFrame, inventory: DataFrame): Result = {
@@ -104,27 +99,21 @@ object ProcessMovement {
     val deadLetter = moving.filter(col("inventory_id").isNull || col("inventory_id") === "")
     val valid = moving.filter(col("inventory_id").isNotNull && col("inventory_id") =!= "")
 
-    // A2/A3: explode each event's delta vector, sum per (key, station) —
-    // map-side partial aggregation collapses the +1/-1 stream before the
-    // shuffle, so 100 TB of events reduce to |keys| × |stations| rows.
-    val deltas = valid
-      .select(col("inventory_id"), explode(deltaEntries).as("e"))
-      .select(col("inventory_id"), col("e.station"), col("e.delta"))
-      .groupBy(col("inventory_id"))
-      .pivot("station", Envelope.counterCols)
-      .agg(sum(col("delta")))
-      .na.fill(0L, Envelope.counterCols)
+    // A2/A3: each event's per-station delta vector, summed per key in one
+    // aggregate — map-side partial aggregation collapses the +1/-1 stream
+    // before the shuffle, so 100 TB of events reduce to |keys| rows.
+    val counters = Envelope.counterCols
+    val sums = deltaSums(statusToCol, col("previous_status"), col("status"), "Complete",
+      "qty_completed", counters).zip(counters).map { case (d, c) => d.as(s"__d_$c") }
+    val deltas = valid.groupBy(col("inventory_id")).agg(sums.head, sums.tail: _*)
 
     // Merge into the ledger: counter += delta for every station column.
-    val d = deltas.columns.filter(_ != "inventory_id")
-      .foldLeft(deltas) { (df, c) => df.withColumnRenamed(c, s"__d_$c") }
-    // d is one row per touched inventory key — batch-derived, so no
+    // deltas is one row per touched inventory key — batch-derived, so no
     // broadcast hint (AQE converts while small; see OrderApproval).
-    val merged = Envelope.counterCols
-      .foldLeft(inventory.join(d, Seq("inventory_id"), "left")) { (df, c) =>
-        df.withColumn(c, col(c) + coalesce(col(s"__d_$c"), lit(0L)))
-      }
-      .drop(d.columns.filter(_ != "inventory_id").toIndexedSeq: _*)
+    val joined = inventory.join(deltas, Seq("inventory_id"), "left")
+    val merged = joined.select(joined.columns.filterNot(_.startsWith("__d_")).toIndexedSeq.map {
+      c => if (counters.contains(c)) (col(c) + coalesce(col(s"__d_$c"), lit(0L))).as(c) else col(c)
+    }: _*)
 
     Result(merged, deadLetter)
   }

@@ -147,8 +147,9 @@ object IndexLifecycle {
     try out.write((name + "\n").getBytes("UTF-8")) finally out.close()
     val ptr = new Path(lcRoot, "CURRENT")
     fs.delete(ptr, false)
-    fs.rename(tmp, ptr)
-    ()
+    if (!fs.rename(tmp, ptr))
+      throw new java.io.IOException(s"index lifecycle at $lcRoot: renaming CURRENT.tmp " +
+        s"to CURRENT failed; $name is marked committed and the next reader recovers it")
   }
 
   /** Persist a generation's drift reference: a deterministic hash

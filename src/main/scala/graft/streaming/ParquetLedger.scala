@@ -1,7 +1,15 @@
 package graft.streaming
 
+import java.io.IOException
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Durable keyed-state ledger backed by versioned parquet — the
   * production shape of the `getState`/`setState` contract the streaming
@@ -21,7 +29,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reader that finds no (valid) pointer recovers the highest marked
   * version instead of silently falling back to `initial` — so the crash
   * window can only ever surface the snapshot being committed or its
-  * predecessor, never lose committed state.
+  * predecessor, never lose committed state. A rename that reports
+  * failure fails the commit loudly: the marked version is recovered by
+  * the next reader, and a retried batch is a guard no-op.
+  *
+  * The marker is also the version's commit record, the way Delta Lake's
+  * log carries a table's schema and each writer's `txn` watermark
+  * (Armbrust et al., VLDB 2020) — one line of JSON:
+  * {{{ {"watermark":<max __max_applied_batch, or null>,"schema":<schema JSON>} }}}
+  * The watermark is observed on the parquet write itself (`df.observe`),
+  * so the record costs no job. `get` reads with the recorded schema (no
+  * schema-inference job) and attaches the watermark to the batch column
+  * as [[IdempotentMerge.WatermarkKey]] metadata, which lets
+  * [[IdempotentMerge]] decide a replay with no Spark action. A version
+  * whose marker is empty (written before records existed) or unreadable
+  * is read with schema inference, and the guard falls back to its probe
+  * job — the same answers for an inference job and a probe job.
   *
   * At cluster scale a transactional table format (Delta/Iceberg) owns
   * this commit protocol; this is the same idea with a pointer file, and
@@ -92,26 +115,59 @@ class ParquetLedger(spark: SparkSession, dir: String, initial: DataFrame) {
   private def recoverVersion: Option[Int] =
     listVersions.filter(v => fs.exists(marker(v))).sorted.lastOption
 
-  /** Latest committed snapshot, or the initial state before any commit. */
-  def get(): DataFrame = currentVersion match {
-    case Some(v) => spark.read.parquet(versionDir(v).toString)
-    case None    => initial
+  /** The commit record in version `v`'s marker; None when the marker is
+    * empty (a pre-record ledger) or unreadable. */
+  private def record(v: Int): Option[(StructType, Option[Long])] =
+    try {
+      val in = fs.open(marker(v))
+      val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val node = ParquetLedger.Json.readTree(json)
+      val wm = node.get("watermark")
+      require(wm.isNull || wm.isIntegralNumber, s"watermark $wm")
+      Some((DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType],
+        Option.when(!wm.isNull)(wm.longValue)))
+    } catch { case NonFatal(_) => None }
+
+  private def write(p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
   }
 
-  /** Commit a new snapshot: write `v<N+1>` fully, mark it committed,
-    * then flip the pointer. `next` tops every EXISTING version dir
-    * (marked or not), so a recovery that resolved an older version can
-    * never clobber a newer — possibly uncommitted — directory.
+  /** Latest committed snapshot, or the initial state before any commit. */
+  def get(): DataFrame = currentVersion match {
+    case Some(v) =>
+      val path = versionDir(v).toString
+      record(v) match {
+        case Some((schema, wm)) =>
+          spark.read.schema(IdempotentMerge.withWatermark(schema, wm)).parquet(path)
+        case None => spark.read.parquet(path)
+      }
+    case None => initial
+  }
+
+  /** Commit a new snapshot: write `v<N+1>` fully, mark it committed with
+    * its record, then flip the pointer. `next` tops every EXISTING
+    * version dir (marked or not), so a recovery that resolved an older
+    * version can never clobber a newer — possibly uncommitted — directory.
     */
   def set(df: DataFrame): Unit = {
     val next = (currentVersion.toSeq ++ listVersions).foldLeft(-1)(_ max _) + 1
-    df.write.mode("overwrite").parquet(versionDir(next).toString)
-    fs.create(marker(next), true).close()
+    val data = IdempotentMerge.stripWatermark(df)
+    val watermark = new Observation()
+    val tracked = data.columns.contains(IdempotentMerge.BatchCol)
+    (if (tracked) data.observe(watermark, max(col(IdempotentMerge.BatchCol)).as("wm")) else data)
+      .write.mode("overwrite").parquet(versionDir(next).toString)
+    val wm = if (tracked) Option(watermark.get("wm")).map(_.asInstanceOf[Long]) else None
+    write(marker(next), s"""{"watermark":${wm.fold("null")(_.toString)},"schema":${data.schema.json}}""")
     val tmp = new Path(root, "CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
+    write(tmp, next.toString)
     fs.delete(pointer, false)
-    fs.rename(tmp, pointer)
-    ()
+    if (!fs.rename(tmp, pointer))
+      throw new IOException(s"ParquetLedger at $dir: renaming CURRENT.tmp to CURRENT " +
+        s"failed; v$next is marked committed and the next reader recovers it")
   }
+}
+
+object ParquetLedger {
+  private val Json = new ObjectMapper()
 }

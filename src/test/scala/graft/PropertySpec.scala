@@ -33,13 +33,15 @@ class PropertySpec extends SparkSpec {
     forSamples(Gen.zip(Gen.listOfN(12, transitionGen), Gen.long), 8) { case (ts, seed) =>
       {
         val shuffled = new scala.util.Random(seed).shuffle(ts)
+        val sums = ProcessMovement.deltaSums(typedLit(ProcessMovement.statusMap),
+          col("previous_status"), col("status"), "Complete", "qty_completed",
+          Envelope.counterCols)
         def deltas(events: Seq[(String, String, String)]) =
           events.toDF("inventory_id", "status", "previous_status")
             .filter(col("previous_status") =!= col("status"))
-            .select(col("inventory_id"), explode(ProcessMovement.deltaEntries).as("e"))
-            .groupBy(col("inventory_id"), col("e.station"))
-            .agg(sum(col("e.delta")).as("d"))
-            .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+            .groupBy(col("inventory_id"))
+            .agg(sums.head, sums.tail: _*)
+            .collect().map(r => r.getString(0) -> sums.indices.map(i => r.getLong(i + 1))).toMap
         assert(deltas(ts) === deltas(shuffled))
       }
     }
