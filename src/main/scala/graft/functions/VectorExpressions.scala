@@ -248,6 +248,117 @@ case class PqEncodeF32(child: Expression,
     copy(child = newChild)
 }
 
+/** An `array<float>` vector scaled to unit length: each element widened
+  * to double, divided by max(‖x‖, 1e-30) and narrowed back to float,
+  * ‖x‖ the square root of [[ArrayDot]]'s self dot, computed ONCE per
+  * vector (the `transform` lambda form re-evaluates the norm per element,
+  * and Catalyst inlines a norm projected beneath it). Bit-identical to
+  * `transform(x, e -> CAST(e / greatest(sqrt(array_dot(x, x)), 1e-30) AS
+  * float))`; zero vectors pass through, null elements stay null.
+  * Generated code calls [[unit]], the one implementation.
+  */
+case class UnitF32(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<float> input, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = child.dataType
+
+  override def prettyName: String = "unit_f32"
+
+  /** The unit vector of `x`. */
+  def unit(x: ArrayData): ArrayData = {
+    val n = x.numElements()
+    var dot = 0.0
+    for (i <- 0 until n) { val v = x.getFloat(i).toDouble; dot += v * v }
+    val norm = math.max(math.sqrt(dot), 1e-30)
+    val out = new Array[Float](n)
+    for (i <- 0 until n) out(i) = (x.getFloat(i).toDouble / norm).toFloat
+    if ((0 until n).exists(x.isNullAt))
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        Array.tabulate[Any](n)(i => if (x.isNullAt(i)) null else out(i)))
+    else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override def nullSafeEval(a: Any): Any = unit(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("unitF32", this, classOf[UnitF32].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $self.unit($a);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Native PQ asymmetric-distance LOOKUP TABLE of one `array<float>` unit
+  * query vector: entry `ss·kCent + cid` is the 6-dp rounded squared L2
+  * distance between the query's subspace-`ss` slice and sub-centroid
+  * `cid` — the table ADC sums per code. Arithmetic is the explode ×
+  * broadcast-codebook × `collect_list` formulation it replaces, step for
+  * step, so tables are bit-identical to it: the float slice widened to
+  * double, ‖v‖² − 2·v·c + ‖c‖² from three element-order dots
+  * ([[ArrayDot]]'s accumulation), then `round(.., 6)` HALF_UP through
+  * `BigDecimal.valueOf` (Spark's double `round`). The codebook rides
+  * the expression as a reference object ([ss][cid][j], parameter-bounded
+  * like [[PqEncodeF32]]'s), so a query's table is one codegen'd
+  * projection: no subspace explode, no shuffle. Generated code calls
+  * [[lookup]], the one implementation of that arithmetic.
+  */
+case class PqAdcTable(child: Expression,
+    cents: Seq[Seq[Seq[Double]]]) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<float> input, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def prettyName: String = "pq_adc_table"
+
+  @transient private lazy val table: Array[Array[Array[Double]]] =
+    cents.map(_.map(_.toArray).toArray).toArray
+
+  /** The lookup table of one unit vector `x`. */
+  def lookup(x: ArrayData): ArrayData = {
+    val kCent = table(0).length
+    val sub = table(0)(0).length
+    val out = new Array[Double](table.length * kCent)
+    for (m <- table.indices) {
+      var vv = 0.0
+      for (j <- 0 until sub) { val v = x.getFloat(m * sub + j).toDouble; vv += v * v }
+      for (cid <- 0 until kCent) {
+        val c = table(m)(cid)
+        var vc = 0.0
+        for (j <- 0 until sub) vc += x.getFloat(m * sub + j).toDouble * c(j)
+        var cc = 0.0
+        for (j <- 0 until sub) cc += c(j) * c(j)
+        val d = vv - 2.0 * vc + cc
+        out(m * kCent + cid) =
+          if (d.isNaN || d.isInfinite) d
+          else java.math.BigDecimal.valueOf(d)
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      }
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override def nullSafeEval(a: Any): Any = lookup(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pqAdcTable", this, classOf[PqAdcTable].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $self.lookup($a);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VectorExpressions {
   /** Column API for [[CosineSimF32]]. */
   def cosineF32(a: Column, b: Column): Column =
@@ -256,11 +367,20 @@ object VectorExpressions {
   /** Column API for [[PqEncodeF32]] — `cents` in the `pqTrain` layout
     * (ss, cid, centroid), regrouped here to the [ss][cid][j] table.
     */
-  def pqEncodeF32(a: Column, cents: Seq[(Long, Long, Seq[Double])]): Column = {
-    val table: Seq[Seq[Seq[Double]]] = cents.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
-    Shim.column(PqEncodeF32(Shim.expression(a), table))
-  }
+  def pqEncodeF32(a: Column, cents: Seq[(Long, Long, Seq[Double])]): Column =
+    Shim.column(PqEncodeF32(Shim.expression(a), byCid(cents)))
+
+  private def byCid(cents: Seq[(Long, Long, Seq[Double])]): Seq[Seq[Seq[Double]]] =
+    cents.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
+
+  /** Column API for [[PqAdcTable]] — `cents` in the `pqTrain` layout,
+    * regrouped like [[pqEncodeF32]]'s.
+    */
+  def pqAdcTable(a: Column, cents: Seq[(Long, Long, Seq[Double])]): Column =
+    Shim.column(PqAdcTable(Shim.expression(a), byCid(cents)))
+
+  /** Column API for [[UnitF32]]. */
+  def unitF32(a: Column): Column = Shim.column(UnitF32(Shim.expression(a)))
 
   /** Column API for [[ArrayDot]]. */
   def arrayDot(a: Column, b: Column): Column =

@@ -3,9 +3,12 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, IntegerType,
+  LongType, StructField, StructType}
 
 import graft.{OpQuery, Tables}
 import graft.OpQuery.{rowsOnly, sql}
+import graft.functions.VectorExpressions.unitF32
 
 /** Embedding similarity search (builder-prompt north-star; SURVEY.md §2.10):
   * brute-force cosine top-k as the exact baseline, random-hyperplane LSH
@@ -814,12 +817,24 @@ object Similarity {
       else vecs.select(col("vec_id").as("vid"), col("embedding").as("ve"),
         cellRoute(cells.map(_._2), 1)(col("embedding")).getItem(0).as("cell"))
 
-    /** (vec_id, embedding) → (qid, qe, cell): one row per probed cell. */
+    /** The query router: an embedding's `nprobe` nearest cells, nearest first. */
+    private def nearest(emb: Column, nprobe: Int): Column =
+      if (rounded) roundedRoute(cells, nprobe)(emb).getField("_2") // the cid of each struct
+      else cellRoute(cells.map(_._2), nprobe)(emb)
+
+    /** (vec_id, embedding) → (qid, qe, cells): one row per query. */
+    def route(queries: DataFrame, nprobe: Int): DataFrame =
+      queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        nearest(col("embedding"), nprobe).as("cells"))
+
+    /** (vec_id, embedding) → (qid, qe, cell): one row per probed cell. The
+      * explode takes [[nearest]] itself, not a projected `cells` column:
+      * Catalyst infers `size(cells) > 0` for an exploded attribute and
+      * pushes it into the scan, which would route every query twice.
+      */
     def probe(queries: DataFrame, nprobe: Int): DataFrame =
-      if (rounded) cellAssignRounded(queries, cells, nprobe)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cid").as("cell"))
-      else queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        explode(cellRoute(cells.map(_._2), nprobe)(col("embedding"))).as("cell"))
+      queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        explode(nearest(col("embedding"), nprobe)).as("cell"))
 
     private def np(nprobe: Option[Int]): Int = nprobe.getOrElse(deriveNprobe(nlist))
 
@@ -879,12 +894,17 @@ object Similarity {
       Quantizer(kmeansCentroids(corpus, nlist.getOrElse(deriveNlist(corpus.count()))),
         rounded = true)
 
-    /** The one centroid read: an index root's `centroids/` (nlist rows). */
+    /** The schema [[Quantizer.write]] stores `centroids/` with. */
+    val CentroidSchema: StructType = StructType(Seq(
+      StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+
+    /** The one centroid read: an index root's `centroids/` (nlist rows,
+      * collected as stored and sorted by cell here).
+      */
     private[Similarity] def read(spark: SparkSession, root: String,
         rounded: Boolean): Quantizer =
-      Quantizer(spark.read.parquet(s"$root/centroids")
-        .orderBy(col("cell")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq, rounded)
+      Quantizer(spark.read.schema(CentroidSchema).parquet(s"$root/centroids").collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1), rounded)
   }
 
   /** Top-`k` rows per qid by (sim desc, vid) — the rank every IVF serve ends with. */
@@ -971,7 +991,17 @@ object Similarity {
     * arithmetic step a SQL oracle can replay.
     */
   def cellAssignRounded(df: DataFrame,
-      cents: Seq[(Int, Seq[Double])], n: Int): DataFrame = {
+      cents: Seq[(Int, Seq[Double])], n: Int): DataFrame =
+    df.select(col("vec_id"), col("embedding"),
+        explode(roundedRoute(cents, n)(col("embedding"))).as("rt"))
+      .select(col("vec_id"), col("embedding"),
+        col("rt._2").as("cid"), col("rt._3").as("dist"), col("rt._1").as("rn"))
+
+  /** [[cellAssignRounded]]'s router as one closure UDF: an embedding's
+    * top-`n` (rank, cid, dist) structs, nearest first (null → null).
+    */
+  private def roundedRoute(cents: Seq[(Int, Seq[Double])],
+      n: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
     // O(1)-plan closure routing (r13 — the cellRoute posture applied to
     // the replayable chain): the first cut crossJoined the centroid
     // frame and windowed per vec_id, materializing N×nlist rows — at
@@ -993,7 +1023,7 @@ object Similarity {
       while (i < c.length) { s2 += c(i) * c(i); i += 1 }
       s2
     }
-    val route = udf { (emb: Seq[Float]) =>
+    udf { (emb: Seq[Float]) =>
       if (emb == null) null
       else {
         val e = emb.toArray
@@ -1016,10 +1046,6 @@ object Similarity {
           .zipWithIndex.map { case (i2, r) => (r + 1, cids(i2), ds(i2)) }
       }
     }
-    df.select(col("vec_id"), col("embedding"),
-        explode(route(col("embedding"))).as("rt"))
-      .select(col("vec_id"), col("embedding"),
-        col("rt._2").as("cid"), col("rt._3").as("dist"), col("rt._1").as("rn"))
   }
 
   /** The seeded deterministic Lloyd trainer behind [[kmeansAssign]],
@@ -3782,6 +3808,14 @@ object Similarity {
     *   codes_deltas/batch=<id>/   their PQ code twins
     *   __delta_manifest           committed batch names
     * }}}
+    * Every store is TYPED: one schema constant, defined beside its
+    * writer, is what the store is written with and what every read
+    * passes ([[Quantizer.CentroidSchema]], [[IvfIndex.VectorSchema]] for
+    * assignments/, vectors/ and deltas/, [[IvfIndex.CodeSchema]] for
+    * codes/ and codes_deltas/, [[IvfIndex.CodebookSchema]],
+    * [[IvfIndex.Sq8Schema]]) — so no read runs a Parquet schema-inference
+    * job. A writer that changes a store's columns changes its constant;
+    * IvfStoreSchemaSpec pins each constant to the schema Parquet infers.
     * Every store write clusters on cell first (one file set per cell —
     * without it every task writes a file into every cell dir). A store
     * read is base ∪ COMMITTED delta batches, and a `cell IN (probed)`
@@ -3813,9 +3847,9 @@ object Similarity {
       * parameter-bounded (mSub·kCent rows).
       */
     private lazy val pqCodebook: Seq[(Long, Long, Seq[Double])] =
-      spark.read.parquet(s"$root/pqcodebook")
-        .orderBy(col("ss"), col("cid")).collect()
+      spark.read.schema(IvfIndex.CodebookSchema).parquet(s"$root/pqcodebook").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toSeq)).toSeq
+        .sortBy(c => (c._1, c._2))
 
     private lazy val fs =
       new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
@@ -3826,6 +3860,11 @@ object Similarity {
     private def stores: Seq[(String, String)] =
       vecStore.map(_ -> "deltas").toSeq ++
         (if (isPq) Seq("codes" -> "codes_deltas") else Nil)
+
+    /** A reader typed with `store`'s schema (a delta dir shares its base's). */
+    private def storeReader(store: String): org.apache.spark.sql.DataFrameReader =
+      spark.read.schema(
+        if (store.startsWith("codes")) IvfIndex.CodeSchema else IvfIndex.VectorSchema)
 
     private def vectorStore: String = vecStore.getOrElse(
       throw new UnsupportedOperationException(s"IvfIndex($root) has no " +
@@ -3842,12 +3881,12 @@ object Similarity {
       if (!purging) heal(base, deltas, full = false)
       val bPath = s"$root/$base"
       val baseDf =
-        if (!purging) spark.read.parquet(bPath)
+        if (!purging) storeReader(base).parquet(bPath)
         else {
           // live purge: neither heal nor fail — serve the intact cell dirs
           val dirs = intactPartDirs(fs, new Path(bPath), "cell")
-          if (dirs.isEmpty) spark.read.parquet(bPath)
-          else spark.read.option("basePath", bPath).parquet(dirs: _*)
+          if (dirs.isEmpty) storeReader(base).parquet(bPath)
+          else storeReader(base).option("basePath", bPath).parquet(dirs: _*)
         }
       val committed = servableDeltaDirs(fs, root, deltas)
       val deltaDirs =
@@ -3856,7 +3895,7 @@ object Similarity {
       // basePath keeps the batch/cell partition columns of the explicitly
       // loaded dirs; batch is not a store column
       if (deltaDirs.isEmpty) baseDf
-      else baseDf.unionByName(spark.read.option("basePath", s"$root/$deltas")
+      else baseDf.unionByName(storeReader(deltas).option("basePath", s"$root/$deltas")
         .parquet(deltaDirs: _*).drop("batch"))
     }
 
@@ -3887,59 +3926,57 @@ object Similarity {
       * (qid, vid, sim), sim 6-dp rounded, self-matches excluded. Queries
       * route to their `nprobe` nearest cells (default [[deriveNprobe]]
       * over the REALIZED nlist — the scan fraction the build was sized
-      * for) and only the probed cells of a store are scanned. The probe
-      * set is parameter-bounded (≤ |queries|·nprobe rows — the query
-      * side is the broadcast side by contract), so ONE collect feeds
-      * both the probed-cell pruning list and the broadcast side as a
-      * LocalRelation, and the final action never re-runs routing over
-      * the query scan. Per codec:
+      * for) and only the probed cells of a store are scanned. The query
+      * side is parameter-bounded (|queries| rows, ≤ nprobe cells each —
+      * the broadcast side by contract), so ONE collect routes it and
+      * returns the probed-cell pruning list, the probes and the query
+      * rows, which enter the final plan as LocalRelations: the final
+      * action never re-runs routing over the query scan, and planning
+      * runs no job beyond that collect and the index's own small reads
+      * (centroids, codebook — typed, collected unsorted, sorted here).
+      * Per codec:
       *  - Flat: exact cosine over the probed cells' vectors;
       *  - Pq: asymmetric distance over the probed cells' codes — each
-      *    query's lookup table (mSub·kCent exact 6-dp subdistances)
-      *    broadcasts as ONE array and the ADC sum is a fixed-order
-      *    DECIMAL fold over the code array (partial-sum order cannot
-      *    flip a rank) — then the ADC top-`rerankFactor·k` re-ranks
-      *    exactly against the vector store, read pruned to the probed
-      *    cells and joined on vid: serving memory holds codes, never the
-      *    float corpus;
+      *    query's lookup table (mSub·kCent exact 6-dp subdistances) is
+      *    computed in the collect by the codegen'd
+      *    [[graft.functions.PqAdcTable]] and broadcasts as ONE array; the
+      *    ADC sum is a fixed-order DECIMAL fold over the code array
+      *    (partial-sum order cannot flip a rank) — then the ADC
+      *    top-`rerankFactor·k` re-ranks exactly against the vector store,
+      *    read pruned to the probed cells and joined on vid: serving
+      *    memory holds codes, never the float corpus;
       *  - Sq8: candidates reconstruct scan-side (xr_i = mn + code_i·scale)
       *    and rank on the 6-dp rounded reconstructed cosine (vid
-      *    tiebreak). Its broadcast side stays the lazily routed probe
-      *    frame (the s26 plan); only the probed-cell list is collected.
+      *    tiebreak).
       */
     def serve(queries: DataFrame, k: Int, nprobe: Option[Int] = None,
         rerankFactor: Int = 8): DataFrame = {
-      val routed = quantizer.probe(queries,
+      import graft.functions.VectorExpressions.{arrayDot, pqAdcTable}
+      val routed = quantizer.route(queries,
         nprobe.getOrElse(deriveNprobe(quantizer.nlist)))
       def inCells(df: DataFrame, cells: Seq[Int]) =
         df.filter(col("cell").isin(cells: _*))
-      val qe = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"))
       codec match {
         case Codec.Flat =>
-          val (probes, cells) = collectProbes(routed)
+          val (probes, _, cells) = collectProbes(routed)
           rankTopK(inCells(vectors, cells).join(broadcast(probes), Seq("cell"))
             .filter(col("vid") =!= col("qid"))
             .select(col("qid"), col("vid"), cosine(col("qe"), col("ve")).as("sim")), k)
             .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
         case Codec.Pq =>
-          val (probes, cells) = collectProbes(routed.select(col("qid"), col("cell")))
           val cb = pqCodebook
-          val mSub = (cb.map(_._1).max + 1).toInt
           // realized sub-centroid count can trail the nominal (tiny
           // corpus); the ADC table is indexed by realized count, codes
           // never exceed it
           val kCent = (cb.map(_._2).max + 1).toInt
           // per-query ADC table, index = ss·kCent + cid; queries
           // normalize like the encoded corpus
-          val qt = pqDists(pqSubvectors(unitVectors(queries), mSub, cb.head._3.length), cb)
-            .groupBy(col("vec_id").as("qid"))
-            .agg(transform(
-              array_sort(collect_list(struct(col("ss"), col("cid"), col("dist")))),
-              e => e.getField("dist")).as("dtab"))
+          val (probes, side, cells) = collectProbes(
+            routed.withColumn("dtab", pqAdcTable(unitF32(col("qe")), cb)))
           val adc = inCells(codes, cells)
-            .join(broadcast(probes), Seq("cell"))
+            .join(broadcast(probes.select(col("qid"), col("cell"))), Seq("cell"))
             .filter(col("vid") =!= col("qid"))
-            .join(broadcast(qt), Seq("qid"))
+            .join(broadcast(side.select(col("qid"), col("dtab"))), Seq("qid"))
             .select(col("qid"), col("vid"), col("cell"),
               // codes are SIGNED bytes holding unsigned cids: +256 wrap
               expr(s"""CAST(aggregate(
@@ -3953,18 +3990,15 @@ object Similarity {
             .filter(col("rn") <= rerankFactor.toLong * k).drop("rn")
           rankTopK(top.select(col("qid"), col("vid"))
             .join(inCells(vectors, cells).select(col("vid"), col("ve")), Seq("vid"))
-            .join(broadcast(qe), Seq("qid"))
+            .join(broadcast(side.select(col("qid"), col("qe"))), Seq("qid"))
             .select(col("qid"), col("vid"), cosine(col("qe"), col("ve")).as("sim")), k)
             .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
         case Codec.Sq8 =>
-          import graft.functions.VectorExpressions.arrayDot
-          val probes = routed.select(col("qid"), col("cell"))
-          val (_, cells) = collectProbes(probes)
+          val (probes, _, cells) = collectProbes(routed)
           val (qq, xx) = (arrayDot(col("qe"), col("qe")), arrayDot(col("xr"), col("xr")))
-          rankTopK(inCells(spark.read.parquet(s"$root/sq8"), cells)
+          rankTopK(inCells(spark.read.schema(IvfIndex.Sq8Schema).parquet(s"$root/sq8"), cells)
             .join(broadcast(probes), Seq("cell"))
             .filter(col("vid") =!= col("qid"))
-            .join(broadcast(qe), Seq("qid"))
             .withColumn("xr", transform(col("code"), c =>
               col("mn") + (pmod(c.cast("long") + lit(256L), lit(256L))) * col("scale")))
             .select(col("qid"), col("vid"),
@@ -4014,8 +4048,10 @@ object Similarity {
       * belongs to its replay, which rewrites both dirs and records; a
       * dir with no `_SUCCESS` is left alone — it may be in flight). A
       * crash before (2) leaves the merged dir invisible; after it,
-      * garbage the next compaction sweeps. `mergedBatchId` must be FRESH
-      * (enforced), like an append's batchId.
+      * garbage the next compaction sweeps. A flip whose rename reports
+      * failure deletes the merged dirs and throws: without a manifest the
+      * listing would serve them beside the batches they fold.
+      * `mergedBatchId` must be FRESH (enforced), like an append's batchId.
       */
     def compact(mergedBatchId: Long): Unit = {
       // the purge rewrites cells inside delta dirs under its marker —
@@ -4031,11 +4067,19 @@ object Similarity {
           "compaction needs a fresh id (the append idempotence contract)")
       if (names.size > 1) {
         stores.foreach { case (_, deltas) =>
-          writeByCell(spark.read.option("basePath", s"$root/$deltas")
+          writeByCell(storeReader(deltas).option("basePath", s"$root/$deltas")
             .parquet(names.map(n => s"$root/$deltas/$n"): _*).drop("batch"),
             s"$root/$deltas/batch=$mergedBatchId")
         }
-        writeDeltaManifest(fs, root, Seq(s"batch=$mergedBatchId")) // the cutover
+        try writeDeltaManifest(fs, root, Seq(s"batch=$mergedBatchId")) // the cutover
+        catch { case e: java.io.IOException =>
+          // no manifest now: the listing would serve the merged batch
+          // beside the batches it folds, so take the merged batch back
+          stores.foreach { case (_, deltas) =>
+            fs.delete(new Path(s"$root/$deltas/batch=$mergedBatchId"), true)
+          }
+          throw e
+        }
       }
       // sweep per store (a crash mid-sweep cannot orphan a code twin whose
       // vector dir is gone) — and only under an existing manifest: on a
@@ -4086,7 +4130,7 @@ object Similarity {
     }
 
     private def purgeStore(tomb: DataFrame, base: String, deltas: String): Unit = {
-      val baseDf = spark.read.parquet(s"$root/$base")
+      val baseDf = storeReader(base).parquet(s"$root/$base")
       // hit cells are bounded by nlist (a sanctioned collect)
       val hitCells = baseDf.join(tomb, Seq("vid"), "left_semi")
         .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
@@ -4096,7 +4140,7 @@ object Similarity {
       val committed = servableDeltaDirs(fs, root, deltas)
       if (committed.nonEmpty) {
         // batch ids are longs; partition inference narrows small ones
-        val d = spark.read.option("basePath", s"$root/$deltas").parquet(committed: _*)
+        val d = storeReader(deltas).option("basePath", s"$root/$deltas").parquet(committed: _*)
           .withColumn("batch", col("batch").cast("long"))
         val hitPairs = d.join(tomb, Seq("vid"), "left_semi")
           .select(col("batch"), col("cell")).distinct().collect()
@@ -4156,7 +4200,7 @@ object Similarity {
       fs.delete(deltaManifestPath(root), false)
       val cb = pq.writePq(corpus, nRows)
       committedDeltaDirs(fs, new Path(s"$root/deltas")).foreach { d =>
-        writeByCell(pq.pqEncode(spark.read.parquet(d)
+        writeByCell(pq.pqEncode(storeReader("deltas").parquet(d)
             .select(col("vid").as("vec_id"), col("ve").as("embedding")), cb),
           s"$root/codes_deltas/${new Path(d).getName}")
       }
@@ -4201,20 +4245,18 @@ object Similarity {
 
     /** (vec_id, embedding) → (vid, code, cell) in one narrow projection:
       * the quantizer's cell plus the per-subspace codes of the inline
-      * unit-normalized vector (the exact [[unitVectors]] expression) —
+      * unit-normalized vector ([[unitVectors]]' [[graft.functions.UnitF32]]) —
       * the rounded encoder on a replayable index, the codegen'd
       * [[graft.functions.PqEncodeF32]] otherwise. Codes are one signed
       * byte per subspace holding the unsigned cid (ANSI-safe ±128 wrap).
       */
     private def pqEncode(vecs: DataFrame,
         cb: Seq[(Long, Long, Seq[Double])]): DataFrame = {
-      import graft.functions.VectorExpressions.{arrayDot, pqEncodeF32}
-      val norm = sqrt(arrayDot(col("ve"), col("ve")))
-      val unit = transform(col("ve"), x => (x / greatest(norm, lit(1e-30))).cast("float"))
+      val unit = unitF32(col("ve"))
       val code =
         if (rounded) transform(pqRoundedEncoder(cb)(unit),
           c => (pmod(c + lit(128L), lit(256L)) - lit(128L)).cast("byte"))
-        else pqEncodeF32(unit, cb)
+        else graft.functions.VectorExpressions.pqEncodeF32(unit, cb)
       quantizer.assign(vecs).select(col("vid"), code.as("code"), col("cell"))
     }
 
@@ -4235,6 +4277,27 @@ object Similarity {
   }
 
   object IvfIndex {
+    /** The schema of the full-precision stores (assignments/, vectors/,
+      * deltas/): [[Quantizer.assign]]'s (vid, ve) by `cell`.
+      */
+    val VectorSchema: StructType = StructType(Seq(StructField("vid", LongType),
+      StructField("ve", ArrayType(FloatType)), StructField("cell", IntegerType)))
+
+    /** The schema of the PQ code stores (codes/, codes_deltas/): `pqEncode`'s
+      * (vid, code) by `cell`.
+      */
+    val CodeSchema: StructType = StructType(Seq(StructField("vid", LongType),
+      StructField("code", ArrayType(ByteType)), StructField("cell", IntegerType)))
+
+    /** The schema `writePq` stores `pqcodebook/` with: (ss, cid, cv). */
+    val CodebookSchema: StructType = StructType(Seq(StructField("ss", LongType),
+      StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
+
+    /** The schema `writeSq8` stores `sq8/` with: (vid, mn, scale, code) by `cell`. */
+    val Sq8Schema: StructType = StructType(Seq(StructField("vid", LongType),
+      StructField("mn", DoubleType), StructField("scale", DoubleType),
+      StructField("code", ArrayType(ByteType)), StructField("cell", IntegerType)))
+
     /** Open an index root with the SAMPLED router ([[Quantizer.sampled]]
       * roots: lifecycle generations, default builds); SQ8 roots route
       * rounded.
@@ -4307,19 +4370,30 @@ object Similarity {
   private def writeByCell(df: DataFrame, path: String): Unit =
     df.repartition(col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Collect a parameter-bounded probe frame (qid[, qe], cell) and return
-    * it as a LocalRelation with the probed cells, sorted.
+  /** Collect a routed query side (qid, qe, cells[, dtab]) — parameter-
+    * bounded, one row per query — and return it as LocalRelations: the
+    * probes (qid, qe, cell), one row per probed cell in routing order;
+    * the query rows (qid, qe[, dtab]); and the probed cells, sorted.
     */
-  private def collectProbes(probes: DataFrame): (DataFrame, Seq[Int]) = {
-    import org.apache.spark.sql.types._
-    val rows = probes.collect()
-    val schema = StructType(probes.columns.toSeq.map {
-      case "qe" => StructField("qe", ArrayType(FloatType), nullable = true)
-      case "cell" => StructField("cell", IntegerType, nullable = false)
-      case c => StructField(c, LongType, nullable = false)
-    })
-    (probes.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
-      rows.map(r => r.getInt(r.fieldIndex("cell"))).distinct.sorted.toSeq)
+  private def collectProbes(routed: DataFrame): (DataFrame, DataFrame, Seq[Int]) = {
+    import org.apache.spark.sql.Row
+    val rows = routed.collect()
+    val side = routed.columns.toSeq.filterNot(_ == "cells")
+    def local(cols: Seq[String], data: Seq[Row]) =
+      routed.sparkSession.createDataFrame(java.util.Arrays.asList(data: _*),
+        StructType(cols.map {
+          case "qe" => StructField("qe", ArrayType(FloatType), nullable = true)
+          case "dtab" => StructField("dtab", ArrayType(DoubleType, containsNull = false))
+          case "cell" => StructField("cell", IntegerType, nullable = false)
+          case c => StructField(c, LongType, nullable = false)
+        }))
+    val probes = rows.toSeq.flatMap { r =>
+      Option(r.getSeq[Int](r.fieldIndex("cells"))).getOrElse(Nil)
+        .map(c => Row(r.getAs[Long]("qid"), r.getAs[Any]("qe"), c))
+    }
+    (local(Seq("qid", "qe", "cell"), probes),
+      local(side, rows.toSeq.map(r => Row.fromSeq(side.map(c => r.getAs[Any](c))))),
+      probes.map(_.getInt(2)).distinct.sorted)
   }
 
   /** COMMITTED delta-batch dirs of an index root (those whose writer
@@ -4388,8 +4462,10 @@ object Similarity {
     finally out.close()
     val dst = deltaManifestPath(indexRoot)
     fs.delete(dst, false)
-    fs.rename(tmp, dst)
-    ()
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"IVF index at $indexRoot: renaming " +
+        "__delta_manifest.tmp to __delta_manifest failed; the index has no manifest " +
+        "and serves from the delta listing until the next commit rewrites it")
   }
 
   /** Record `batchId` as committed — called at the writer's JOINT commit
@@ -4661,17 +4737,11 @@ object Similarity {
     * distance ranks candidates in (approximate) COSINE order, and the
     * exact cosine re-rank only has to fix quantization noise, not a
     * metric mismatch (measured: +0.35 recall at sf0.1 over encoding raw
-    * vectors). Zero vectors pass through unscaled.
+    * vectors). Zero vectors pass through unscaled. The normalization is
+    * [[graft.functions.UnitF32]], the one form every PQ path uses.
     */
-  private def unitVectors(df: DataFrame): DataFrame = {
-    import graft.functions.VectorExpressions.arrayDot
-    df.select(col("vec_id"), col("embedding"),
-        sqrt(arrayDot(col("embedding"), col("embedding"))).as("__n"))
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => (x / greatest(col("__n"), lit(1e-30))).cast("float"))
-          .as("embedding"))
-  }
+  private def unitVectors(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), unitF32(col("embedding")).as("embedding"))
 
   /** Sub-centroids per PQ subspace for the PERSISTED s23 index: 256 =
     * 8-bit codes, the FAISS PQ16x8 production standard. s11's in-memory

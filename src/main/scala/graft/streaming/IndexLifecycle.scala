@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.llm.Similarity
 import graft.llm.Similarity.{IvfIndex, Quantizer}
@@ -152,6 +153,10 @@ object IndexLifecycle {
         s"to CURRENT failed; $name is marked committed and the next reader recovers it")
   }
 
+  /** The schema [[writeDriftRef]] stores `driftref/` with. */
+  val DriftRefSchema: StructType = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType))))
+
   /** Persist a generation's drift reference: a deterministic hash
     * sample of the vectors the generation's codebook was trained on
     * (expected ≤ ~[[DriftRefTargetRows]] rows; the WHOLE corpus when it
@@ -175,7 +180,7 @@ object IndexLifecycle {
     */
   private[streaming] def driftBase(spark: SparkSession, genRoot: String): DataFrame = {
     val p = new Path(s"$genRoot/driftref")
-    if (fsOf(spark, genRoot).exists(p)) spark.read.parquet(p.toString)
+    if (fsOf(spark, genRoot).exists(p)) spark.read.schema(DriftRefSchema).parquet(p.toString)
     else IvfIndex.open(spark, genRoot).vectors
       .select(col("vid").as("vec_id"), col("ve").as("embedding"))
   }

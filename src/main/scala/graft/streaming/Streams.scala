@@ -1367,10 +1367,15 @@ object Streams {
     * rewrite dir that publishes atomically anyway, but the st12 delta
     * path writes into the LIVE generation dir — a torn in-place write
     * there would leave an unparseable applied-set that fails every
-    * later tick. The rename makes the worst crash outcome "applied set
-    * missing one id", which every caller tolerates (replays are
-    * idempotent; the set is an optimization, not the correctness
-    * anchor).
+    * later tick. The destination is deleted before the rename, so a
+    * crash between the two, or a rename the filesystem refuses, leaves
+    * NO applied set at all, not one missing id. A refused rename throws
+    * `IOException` and fails the caller's tick. The st12 and BPE
+    * lifecycles tolerate a lost set (their replays are idempotent
+    * overwrites). [[runManifestStream]] does not: `mergeManifests` is
+    * not idempotent and the set is its guard against a double merge, so
+    * it relies on this throw coming before `swapIntoPlace` publishes a
+    * manifest dir without the set.
     */
   private[streaming] def writeAppliedBatches(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, ids: Set[Long]): Unit = {
@@ -1380,8 +1385,9 @@ object Streams {
     try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     fs.delete(dst, false)
-    fs.rename(tmp, dst)
-    ()
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"renaming $tmp to $dst failed; $dir has no " +
+        "applied-batch set until the next write")
   }
 
   /** Streaming dataset-manifest maintenance — q81's algebraic merge law
