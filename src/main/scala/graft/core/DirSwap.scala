@@ -115,16 +115,17 @@ object DirSwap {
     if (!fs.exists(dst) && fs.exists(old)) { fs.rename(old, dst); () }
   }
 
-  /** Heal every child-level swap under `parent` (the per-partition-dir
-    * form used by the IVF index purge, where each `cell=k` directory is
-    * swapped individually): for each `<name>__old` child, restore it when
-    * the primary `<name>` is missing (crash between the two renames), and
-    * delete it when the primary exists (crash after the publishing rename
-    * but before the cleanup delete — the parked copy is superseded
-    * garbage, and leaving it would break partition discovery: a
-    * `cell=k__old` dir makes Spark infer the `cell` partition column as
-    * string instead of int). One listStatus of the parent — bounded by
-    * the partition count, not the data.
+  /** Heal every child-level swap under `parent` (the per-child form used
+    * by the IVF index purge, which swaps each hit `cell=k` dir of a base
+    * store and each hit `batch=<id>` dir of a deltas root individually):
+    * for each `<name>__old` child, restore it when the primary `<name>`
+    * is missing (crash between the two renames), and delete it when the
+    * primary exists (crash after the publishing rename but before the
+    * cleanup delete — the parked copy is superseded garbage, and leaving
+    * it would break partition discovery: a `cell=k__old` dir makes Spark
+    * infer the `cell` partition column as string instead of int). One
+    * listStatus of the parent — bounded by the child count, not the
+    * data.
     */
   def recoverChildren(fs: FileSystem, parent: Path): Unit = {
     if (fs.exists(parent)) {

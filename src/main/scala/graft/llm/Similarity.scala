@@ -3804,8 +3804,8 @@ object Similarity {
     *                              use assignments/, PQ builds vectors/
     *   pqcodebook/, codes/        the PQ codec: (vid, code) by cell
     *   sq8/                       the SQ8 codec: (vid, mn, scale, code)
-    *   deltas/batch=<id>/         appended vector batches, by cell
-    *   codes_deltas/batch=<id>/   their PQ code twins
+    *   deltas/batch=<id>/         appended vector batches, flat
+    *   codes_deltas/batch=<id>/   their PQ code twins, flat
     *   __delta_manifest           committed batch names
     * }}}
     * Every store is TYPED: one schema constant, defined beside its
@@ -3816,11 +3816,15 @@ object Similarity {
     * [[IvfIndex.Sq8Schema]]) — so no read runs a Parquet schema-inference
     * job. A writer that changes a store's columns changes its constant;
     * IvfStoreSchemaSpec pins each constant to the schema Parquet infers.
-    * Every store write clusters on cell first (one file set per cell —
-    * without it every task writes a file into every cell dir). A store
-    * read is base ∪ COMMITTED delta batches, and a `cell IN (probed)`
-    * predicate on it prunes at the directory level on both sides. A
-    * batch commits JOINTLY: on a PQ index it is visible only once both
+    * A base store is written by cell ([[writeByCell]]: one `cell=<k>`
+    * dir per cell, clustered on cell first — without it every task
+    * writes a file into every cell dir). A delta batch is written FLAT
+    * ([[writeBatch]]): `cell` is a data column, rows are clustered and
+    * sorted on it, so a micro-batch is one file, not one per touched
+    * cell, and a large merged batch keeps whole cells per file. A store
+    * read is base ∪ COMMITTED delta batches; serving prunes the base to
+    * the probed cells at the directory level and reads the delta batches
+    * whole. A batch commits JOINTLY: on a PQ index it is visible only once both
     * its vector and code dirs carry `_SUCCESS`, and it is recorded in the
     * manifest after that ([[servableDeltaDirs]]) — so a crash between
     * the writes leaves the index serving exactly as before, and the
@@ -3876,11 +3880,19 @@ object Similarity {
     /** Every PQ code row (vid, code, cell): base ∪ committed code deltas. */
     def codes: DataFrame = readStore("codes", "codes_deltas")
 
-    private def readStore(base: String, deltas: String): DataFrame = {
+    /** Base ∪ committed deltas of one store; `cells` prunes the base to
+      * those cell dirs. The deltas are read whole: as a pushed data filter,
+      * `cell IN (probed)` would put the probed-cell list into the generated
+      * code of their scan, compiled anew whenever the list changes, and it
+      * cannot prune a micro-batch's single row group anyway. Serving's join
+      * on cell (or on vid, for the re-rank) drops the other cells' rows.
+      */
+    private def readStore(base: String, deltas: String,
+        cells: Option[Seq[Int]] = None): DataFrame = {
       val purging = fs.exists(purgeMarker(root))
-      if (!purging) heal(base, deltas, full = false)
+      if (!purging) heal(base, deltas)
       val bPath = s"$root/$base"
-      val baseDf =
+      val whole =
         if (!purging) storeReader(base).parquet(bPath)
         else {
           // live purge: neither heal nor fail — serve the intact cell dirs
@@ -3888,45 +3900,45 @@ object Similarity {
           if (dirs.isEmpty) storeReader(base).parquet(bPath)
           else storeReader(base).option("basePath", bPath).parquet(dirs: _*)
         }
+      val baseDf = cells.fold(whole)(cs => whole.filter(col("cell").isin(cs: _*)))
       val committed = servableDeltaDirs(fs, root, deltas)
       val deltaDirs =
         if (!purging) committed
-        else committed.flatMap(b => intactPartDirs(fs, new Path(b), "cell"))
-      // basePath keeps the batch/cell partition columns of the explicitly
-      // loaded dirs; batch is not a store column
+        else {
+          // a batch mid-swap is invisible until the purge publishes it
+          val intact = intactPartDirs(fs, new Path(s"$root/$deltas"), "batch")
+            .map(d => new Path(d).getName).toSet
+          committed.filter(d => intact(new Path(d).getName))
+        }
       if (deltaDirs.isEmpty) baseDf
-      else baseDf.unionByName(storeReader(deltas).option("basePath", s"$root/$deltas")
-        .parquet(deltaDirs: _*).drop("batch"))
+      else baseDf.unionByName(storeReader(deltas).parquet(deltaDirs: _*))
     }
 
-    /** Heal interrupted per-cell [[graft.core.DirSwap]] swaps a crashed
-      * [[purge]] left in one store: a crash between DirSwap's two renames
-      * leaves `cell=k__old` with `cell=k` missing — unhealed, that cell's
-      * rows vanish from serving and the stray dir breaks partition
-      * typing. Readers heal only when no purge marker is up: a reader
-      * racing a LIVE purge could otherwise restore a mid-swap dir and
-      * break the purger's publishing rename, so while the marker exists
-      * readers serve the intact cell dirs as they are (a crashed-swap
-      * cell stays invisible until the next purge, never corrupted). A
-      * STALE marker (purge crashed) is reclaimed by the next purge — the
-      * single writer — which heals `full`y. Reader-side heals skip the
-      * per-batch delta dirs when a manifest is present: a crashed swap
-      * exists only under a live-or-stale marker, so those listings
-      * provably find nothing.
+    /** Heal interrupted [[graft.core.DirSwap]] swaps a crashed [[purge]]
+      * left in one store: a crash between DirSwap's two renames leaves
+      * `cell=k__old` (base) or `batch=b__old` (deltas) with the primary
+      * missing — unhealed, that cell's rows vanish from serving (and the
+      * stray dir breaks partition typing), or the manifest names a
+      * batch dir that is gone. Readers heal only when no purge marker is
+      * up: a reader racing a LIVE purge could otherwise restore a
+      * mid-swap dir and break the purger's publishing rename, so while
+      * the marker exists readers serve the intact cell and batch dirs as
+      * they are (a crashed swap stays invisible until the next purge,
+      * never corrupted). A STALE marker (purge crashed) is reclaimed by
+      * the next purge — the single writer — which heals before it
+      * re-marks. One listing of the base root and one of the deltas
+      * root.
       */
-    private def heal(base: String, deltas: String, full: Boolean): Unit = {
-      graft.core.DirSwap.recoverChildren(fs, new Path(s"$root/$base"))
-      if (full || readDeltaManifest(fs, root).isEmpty)
-        servableDeltaDirsListing(fs, root, deltas).foreach { d =>
-          graft.core.DirSwap.recoverChildren(fs, new Path(d))
-        }
-    }
+    private def heal(base: String, deltas: String): Unit =
+      Seq(base, deltas).foreach(d =>
+        graft.core.DirSwap.recoverChildren(fs, new Path(s"$root/$d")))
 
     /** Serve the top-`k` neighbors of each (vec_id, embedding) query as
       * (qid, vid, sim), sim 6-dp rounded, self-matches excluded. Queries
       * route to their `nprobe` nearest cells (default [[deriveNprobe]]
       * over the REALIZED nlist — the scan fraction the build was sized
-      * for) and only the probed cells of a store are scanned. The query
+      * for) and only the probed cells of a base store are scanned (delta
+      * batches are read whole, [[readStore]]). The query
       * side is parameter-bounded (|queries| rows, ≤ nprobe cells each —
       * the broadcast side by contract), so ONE collect routes it and
       * returns the probed-cell pruning list, the probes and the query
@@ -3954,12 +3966,11 @@ object Similarity {
       import graft.functions.VectorExpressions.{arrayDot, pqAdcTable}
       val routed = quantizer.route(queries,
         nprobe.getOrElse(deriveNprobe(quantizer.nlist)))
-      def inCells(df: DataFrame, cells: Seq[Int]) =
-        df.filter(col("cell").isin(cells: _*))
+      def probedVectors(cells: Seq[Int]) = readStore(vectorStore, "deltas", Some(cells))
       codec match {
         case Codec.Flat =>
           val (probes, _, cells) = collectProbes(routed)
-          rankTopK(inCells(vectors, cells).join(broadcast(probes), Seq("cell"))
+          rankTopK(probedVectors(cells).join(broadcast(probes), Seq("cell"))
             .filter(col("vid") =!= col("qid"))
             .select(col("qid"), col("vid"), cosine(col("qe"), col("ve")).as("sim")), k)
             .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
@@ -3973,7 +3984,7 @@ object Similarity {
           // normalize like the encoded corpus
           val (probes, side, cells) = collectProbes(
             routed.withColumn("dtab", pqAdcTable(unitF32(col("qe")), cb)))
-          val adc = inCells(codes, cells)
+          val adc = readStore("codes", "codes_deltas", Some(cells))
             .join(broadcast(probes.select(col("qid"), col("cell"))), Seq("cell"))
             .filter(col("vid") =!= col("qid"))
             .join(broadcast(side.select(col("qid"), col("dtab"))), Seq("qid"))
@@ -3989,14 +4000,15 @@ object Similarity {
           val top = adc.withColumn("rn", row_number().over(wA))
             .filter(col("rn") <= rerankFactor.toLong * k).drop("rn")
           rankTopK(top.select(col("qid"), col("vid"))
-            .join(inCells(vectors, cells).select(col("vid"), col("ve")), Seq("vid"))
+            .join(probedVectors(cells).select(col("vid"), col("ve")), Seq("vid"))
             .join(broadcast(side.select(col("qid"), col("qe"))), Seq("qid"))
             .select(col("qid"), col("vid"), cosine(col("qe"), col("ve")).as("sim")), k)
             .select(col("qid"), col("vid"), round(col("sim"), 6).as("sim"))
         case Codec.Sq8 =>
           val (probes, _, cells) = collectProbes(routed)
           val (qq, xx) = (arrayDot(col("qe"), col("qe")), arrayDot(col("xr"), col("xr")))
-          rankTopK(inCells(spark.read.schema(IvfIndex.Sq8Schema).parquet(s"$root/sq8"), cells)
+          rankTopK(spark.read.schema(IvfIndex.Sq8Schema).parquet(s"$root/sq8")
+            .filter(col("cell").isin(cells: _*))
             .join(broadcast(probes), Seq("cell"))
             .filter(col("vid") =!= col("qid"))
             .withColumn("xr", transform(col("code"), c =>
@@ -4012,8 +4024,9 @@ object Similarity {
     /** Append a (vec_id, embedding) batch WITHOUT rebuilding — the FAISS
       * `add` lifecycle: the index's own quantizer (and PQ codebook)
       * route and encode the batch, which lands whole in
-      * `deltas/batch=<id>` (and its `codes_deltas` twin on a PQ index);
-      * no base file is touched. The two writes overlap — visibility
+      * `deltas/batch=<id>` (and its `codes_deltas` twin on a PQ index)
+      * through [[writeBatch]] — one file per store for a micro-batch; no
+      * base file is touched. The two writes overlap — visibility
       * needs both regardless of order — and the manifest record lands
       * strictly after both. `batchId` is the batch's identity and is
       * REQUIRED for replay idempotence: a replay overwrites identical
@@ -4023,7 +4036,7 @@ object Similarity {
       */
     def append(batch: DataFrame, batchId: Long): Unit = {
       if (isPq)
-        inParallel(writeVectorDelta(batch, batchId), writeByCell(
+        inParallel(writeVectorDelta(batch, batchId), writeBatch(
           pqEncode(batch, pqCodebook), s"$root/codes_deltas/batch=$batchId"))
       else writeVectorDelta(batch, batchId)
       recordDeltaBatch(spark, root, batchId) // the joint commit point
@@ -4032,7 +4045,7 @@ object Similarity {
     /** The vector half of [[append]], uncommitted until recorded. */
     private[llm] def writeVectorDelta(batch: DataFrame, batchId: Long): Unit = {
       require(vecStore.isDefined, s"IvfIndex($root) is $codec-shaped and build-once")
-      writeByCell(quantizer.assign(batch), s"$root/deltas/batch=$batchId")
+      writeBatch(quantizer.assign(batch), s"$root/deltas/batch=$batchId")
     }
 
     /** DELTA COMPACTION: fold every servable delta batch (of every store)
@@ -4042,15 +4055,18 @@ object Similarity {
       * folds. CRASH-SAFE by the manifest flip: (1) the union lands whole
       * in `batch=<mergedBatchId>` before any reader can see it; (2) the
       * manifest flips (tmp + rename) to list only the merged batch — a
-      * reader sees the old set or the merged one, never both; (3) every
+      * reader sees the old set or the merged one, never both (a crash
+      * between the flip's delete and its rename leaves the complete tmp,
+      * which [[readDeltaManifest]] reads in its place); (3) every
       * own-store-committed batch dir the manifest no longer lists is
       * swept (a torn batch's committed half too: an unlisted batch
       * belongs to its replay, which rewrites both dirs and records; a
       * dir with no `_SUCCESS` is left alone — it may be in flight). A
       * crash before (2) leaves the merged dir invisible; after it,
       * garbage the next compaction sweeps. A flip whose rename reports
-      * failure deletes the merged dirs and throws: without a manifest the
-      * listing would serve them beside the batches they fold.
+      * failure deletes the merged dirs and the tmp and throws: without a
+      * manifest the listing would serve them beside the batches they
+      * fold.
       * `mergedBatchId` must be FRESH (enforced), like an append's batchId.
       */
     def compact(mergedBatchId: Long): Unit = {
@@ -4067,17 +4083,18 @@ object Similarity {
           "compaction needs a fresh id (the append idempotence contract)")
       if (names.size > 1) {
         stores.foreach { case (_, deltas) =>
-          writeByCell(storeReader(deltas).option("basePath", s"$root/$deltas")
-            .parquet(names.map(n => s"$root/$deltas/$n"): _*).drop("batch"),
+          writeBatch(storeReader(deltas).parquet(names.map(n => s"$root/$deltas/$n"): _*),
             s"$root/$deltas/batch=$mergedBatchId")
         }
         try writeDeltaManifest(fs, root, Seq(s"batch=$mergedBatchId")) // the cutover
         catch { case e: java.io.IOException =>
           // no manifest now: the listing would serve the merged batch
-          // beside the batches it folds, so take the merged batch back
+          // beside the batches it folds, so take the merged batch back —
+          // and the tmp that names it, which readers would fall back to
           stores.foreach { case (_, deltas) =>
             fs.delete(new Path(s"$root/$deltas/batch=$mergedBatchId"), true)
           }
+          fs.delete(deltaManifestTmpPath(root), false)
           throw e
         }
       }
@@ -4096,17 +4113,20 @@ object Similarity {
 
     /** Right-to-be-forgotten cascade into the index: embeddings (and
       * their PQ codes — a 16-byte sketch of a forgotten vector is still
-      * retained data) are doc-derived artifacts. PARTITION-PRUNED
-      * rewrite per store: only the cells (and, in the deltas, the exact
-      * (batch, cell) pairs) holding a tombstoned vector are read and
-      * rewritten, in one anti-join job each; every other cell's files are
-      * untouched, so the cost scales with the tombstones' cell footprint,
-      * not the index. Each hit partition publishes through the crash-safe
-      * [[graft.core.DirSwap]] under a `__purge_inprogress` marker (see
-      * [[heal]]). Only SERVABLE delta batches are purged — a torn batch
-      * belongs to its replay (purging one store of it would be undone
-      * when the replay rewrites both), and its rows persist until then,
-      * which the purge says out loud. Centroids are unaffected.
+      * retained data) are doc-derived artifacts. PRUNED rewrite per
+      * store: only the base cells and the delta batches holding a
+      * tombstoned vector are read and rewritten without it; every other
+      * cell's and batch's files are untouched, so the cost scales with
+      * the tombstones' footprint, not the index. A hit base cell is
+      * rewritten in one anti-join job for all hit cells, a hit delta
+      * batch whole through [[writeBatch]] — a batch whose every row is
+      * tombstoned publishes EMPTY, so the name the manifest records still
+      * resolves. Each hit cell and batch dir publishes through the
+      * crash-safe [[graft.core.DirSwap]] under a `__purge_inprogress`
+      * marker (see [[heal]]). Only SERVABLE delta batches are purged — a
+      * torn batch belongs to its replay (purging one store of it would be
+      * undone when the replay rewrites both), and its rows persist until
+      * then, which the purge says out loud. Centroids are unaffected.
       */
     def purge(tombVecIds: DataFrame): Unit = {
       require(vecStore.isDefined,
@@ -4123,62 +4143,47 @@ object Similarity {
       // single writer, so reclaim it, heal every store, and re-mark
       val marker = purgeMarker(root)
       fs.delete(marker, false)
-      stores.foreach { case (base, deltas) => heal(base, deltas, full = true) }
+      stores.foreach { case (base, deltas) => heal(base, deltas) }
       fs.create(marker).close()
       try stores.foreach { case (base, deltas) => purgeStore(tomb, base, deltas) }
       finally { fs.delete(marker, false); () }
     }
 
     private def purgeStore(tomb: DataFrame, base: String, deltas: String): Unit = {
+      import graft.core.DirSwap.swapIntoPlace
       val baseDf = storeReader(base).parquet(s"$root/$base")
       // hit cells are bounded by nlist (a sanctioned collect)
       val hitCells = baseDf.join(tomb, Seq("vid"), "left_semi")
         .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-      if (hitCells.nonEmpty)
-        rewriteParts(tomb, baseDf.filter(col("cell").isin(hitCells.map(Integer.valueOf): _*)),
-          Seq("cell"), s"$root/$base", hitCells.map(c => s"cell=$c"))
+      if (hitCells.nonEmpty) {
+        val tmpRoot = s"$root/${base}__purging"
+        writeByCell(baseDf.filter(col("cell").isin(hitCells.map(Integer.valueOf): _*))
+          .join(tomb, Seq("vid"), "left_anti"), tmpRoot)
+        hitCells.foreach { c =>
+          val tmp = new Path(s"$tmpRoot/cell=$c")
+          val dst = new Path(s"$root/$base/cell=$c")
+          // a cell whose EVERY row was tombstoned has no tmp dir: drop it
+          if (fs.exists(tmp)) swapIntoPlace(fs, tmp, dst)
+          else { fs.delete(dst, true); () }
+        }
+        fs.delete(new Path(tmpRoot), true)
+      }
       val committed = servableDeltaDirs(fs, root, deltas)
       if (committed.nonEmpty) {
-        // batch ids are longs; partition inference narrows small ones
-        val d = storeReader(deltas).option("basePath", s"$root/$deltas").parquet(committed: _*)
-          .withColumn("batch", col("batch").cast("long"))
-        val hitPairs = d.join(tomb, Seq("vid"), "left_semi")
-          .select(col("batch"), col("cell")).distinct().collect()
-          .map(r => (r.getLong(0), r.getInt(1))).sorted
-        if (hitPairs.nonEmpty)
-          rewriteParts(tomb, d
-            // single-column isin filters PRUNE dirs (to the batch × cell
-            // cross product); the struct-pair filter then keeps only the
-            // EXACT hit pairs, so untouched pairs are not rewritten
-            .filter(col("batch").isin(hitPairs.map(_._1).distinct
-              .map(java.lang.Long.valueOf): _*))
-            .filter(col("cell").isin(hitPairs.map(_._2).distinct
-              .map(Integer.valueOf): _*))
-            .filter(struct(col("batch"), col("cell"))
-              .isin(hitPairs.map { case (b, c) => struct(lit(b), lit(c)) }.toSeq: _*)),
-            Seq("batch", "cell"), s"$root/$deltas",
-            hitPairs.map { case (b, c) => s"batch=$b/cell=$c" })
+        // hit batches are bounded by the committed set; batch ids are
+        // longs, and partition inference narrows small ones
+        val hitBatches = storeReader(deltas).option("basePath", s"$root/$deltas")
+          .parquet(committed: _*).join(tomb, Seq("vid"), "left_semi")
+          .select(col("batch").cast("long")).distinct().collect().map(_.getLong(0)).sorted
+        val tmpRoot = s"$root/${deltas}__purging"
+        hitBatches.foreach { b =>
+          val name = s"batch=$b"
+          writeBatch(storeReader(deltas).parquet(s"$root/$deltas/$name")
+            .join(tomb, Seq("vid"), "left_anti"), s"$tmpRoot/$name")
+          swapIntoPlace(fs, new Path(s"$tmpRoot/$name"), new Path(s"$root/$deltas/$name"))
+        }
+        fs.delete(new Path(tmpRoot), true)
       }
-    }
-
-    /** Rewrite the hit partitions of `dir` without the tombstones into
-      * `<dir>__purging`, then swap each into place; a partition whose
-      * EVERY row was tombstoned has no tmp dir and is dropped.
-      */
-    private def rewriteParts(tomb: DataFrame, hit: DataFrame,
-        partCols: Seq[String], dir: String, parts: Seq[String]): Unit = {
-      val tmpRoot = s"${dir}__purging"
-      hit.join(tomb, Seq("vid"), "left_anti")
-        .repartition(partCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(tmpRoot)
-      parts.foreach { p =>
-        val tmp = new Path(s"$tmpRoot/$p")
-        val dst = new Path(s"$dir/$p")
-        if (fs.exists(tmp)) graft.core.DirSwap.swapIntoPlace(fs, tmp, dst)
-        else { fs.delete(dst, true); () }
-      }
-      fs.delete(new Path(tmpRoot), true)
-      ()
     }
 
     /** Add the PQ codec to a Flat index (the st12 generations serve the
@@ -4197,10 +4202,11 @@ object Similarity {
     def withPq(corpus: DataFrame, nRows: Long): IvfIndex = {
       require(codec == Codec.Flat, s"IvfIndex($root) is already $codec-shaped")
       val pq = new IvfIndex(spark, root, rounded, Codec.Pq, vecStore, Some(quantizer))
-      fs.delete(deltaManifestPath(root), false)
+      // no manifest, and no tmp for readers to fall back to
+      Seq(deltaManifestPath(root), deltaManifestTmpPath(root)).foreach(fs.delete(_, false))
       val cb = pq.writePq(corpus, nRows)
       committedDeltaDirs(fs, new Path(s"$root/deltas")).foreach { d =>
-        writeByCell(pq.pqEncode(storeReader("deltas").parquet(d)
+        writeBatch(pq.pqEncode(storeReader("deltas").parquet(d)
             .select(col("vid").as("vec_id"), col("ve").as("embedding")), cb),
           s"$root/codes_deltas/${new Path(d).getName}")
       }
@@ -4366,9 +4372,18 @@ object Similarity {
     }
   }
 
-  /** Write a (…, cell) frame partitioned by cell, clustered on cell first. */
+  /** Write a (…, cell) base store partitioned by cell, clustered on cell first. */
   private def writeByCell(df: DataFrame, path: String): Unit =
     df.repartition(col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
+
+  /** Write a (…, cell) delta batch FLAT: clustered and sorted on cell,
+    * `cell` a data column. AQE coalesces a micro-batch's shuffle into one
+    * file; a large batch keeps whole cells per file, each file's rows in
+    * cell order.
+    */
+  private def writeBatch(df: DataFrame, path: String): Unit =
+    df.repartition(col("cell")).sortWithinPartitions(col("cell"))
+      .write.mode("overwrite").parquet(path)
 
   /** Collect a routed query side (qid, qe, cells[, dtab]) — parameter-
     * bounded, one row per query — and return it as LocalRelations: the
@@ -4406,11 +4421,8 @@ object Similarity {
     */
   private def committedDeltaDirs(fs: org.apache.hadoop.fs.FileSystem,
       dPath: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(dPath)) Seq.empty
-    else fs.listStatus(dPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
+    intactPartDirs(fs, dPath, "batch")
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
 
   // ---- committed-batch MANIFEST (r16 — the r15 verdict's #2) -------------
   // Every index read used to re-list the delta dirs and probe `_SUCCESS`
@@ -4432,40 +4444,57 @@ object Similarity {
   private def deltaManifestPath(indexRoot: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$indexRoot/__delta_manifest")
 
+  private def deltaManifestTmpPath(indexRoot: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"$indexRoot/__delta_manifest.tmp")
+
+  /** The last line of every manifest [[writeDeltaManifest]] writes. */
+  private val DeltaManifestEnd = "end"
+
   /** Some(committed batch names) when the manifest exists (possibly
     * empty); None → no manifest, callers use the listing recovery path.
-    * An unreadable manifest (torn rename is impossible — tmp + rename —
-    * but an operator truncation isn't) degrades to None, never to a
-    * wrong answer.
+    * A manifest is COMPLETE only when it ends with the [[DeltaManifestEnd]]
+    * sentinel; a truncated one degrades to None, never to a wrong
+    * answer. When `__delta_manifest` is missing, a complete
+    * `__delta_manifest.tmp` is the manifest: a writer that died between
+    * the flip's delete and its rename left it, and it names exactly the
+    * set being committed — after a compaction the listing would serve
+    * the merged batch beside every batch it folds. Readers never
+    * promote the tmp; the next commit rewrites both.
     */
   private[graft] def readDeltaManifest(fs: org.apache.hadoop.fs.FileSystem,
       indexRoot: String): Option[Seq[String]] = {
-    val p = deltaManifestPath(indexRoot)
+    def read(p: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
+      val in = fs.open(p)
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).toSeq
+        finally in.close()
+      if (lines.lastOption.contains(DeltaManifestEnd))
+        Some(lines.filter(_.startsWith("batch=")))
+      else None
+    }
     try {
-      if (!fs.exists(p)) None
+      val p = deltaManifestPath(indexRoot)
+      if (fs.exists(p)) read(p)
       else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        Some(text.linesIterator.map(_.trim)
-          .filter(n => n.startsWith("batch=")).toSeq)
+        val tmp = deltaManifestTmpPath(indexRoot)
+        if (fs.exists(tmp)) read(tmp) else None
       }
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   private def writeDeltaManifest(fs: org.apache.hadoop.fs.FileSystem,
       indexRoot: String, names: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexRoot/__delta_manifest.tmp")
+    val tmp = deltaManifestTmpPath(indexRoot)
     val out = fs.create(tmp, true)
-    try out.write(names.distinct.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
+    try out.write((names.distinct.sorted :+ DeltaManifestEnd)
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     val dst = deltaManifestPath(indexRoot)
     fs.delete(dst, false)
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(s"IVF index at $indexRoot: renaming " +
-        "__delta_manifest.tmp to __delta_manifest failed; the index has no manifest " +
-        "and serves from the delta listing until the next commit rewrites it")
+        "__delta_manifest.tmp to __delta_manifest failed; readers fall back to the " +
+        "tmp, else to the delta listing, until the next commit rewrites the manifest")
   }
 
   /** Record `batchId` as committed — called at the writer's JOINT commit
@@ -4549,15 +4578,16 @@ object Similarity {
   private def purgeMarker(indexRoot: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$indexRoot/__purge_inprogress")
 
-  /** Well-formed `prefix=<digits>` child dirs of `parent` — the
-    * marker-up read path: explicit dirs keep a mid-swap `<name>__old`
-    * sibling from breaking integer partition-column inference.
+  /** Well-formed `prefix=<integer>` child dirs of `parent` (`cell=<k>`
+    * of a base store, `batch=<id>` of a deltas root — merged batch ids
+    * are negative): a mid-swap `<name>__old` sibling is neither a cell
+    * nor a batch. One listing.
     */
   private def intactPartDirs(fs: org.apache.hadoop.fs.FileSystem,
       parent: org.apache.hadoop.fs.Path, prefix: String): Seq[String] =
     if (!fs.exists(parent)) Seq.empty
     else fs.listStatus(parent).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.matches(s"$prefix=\\d+"))
+      .filter(st => st.isDirectory && st.getPath.getName.matches(s"$prefix=-?\\d+"))
       .map(_.getPath.toString)
 
   /** Committed-but-UNSERVABLE delta batches of a PQ-shaped index: one

@@ -1083,8 +1083,10 @@ object Streams {
     finally out.close()
     val dst = new org.apache.hadoop.fs.Path(root, ForgetIntentFile)
     fs.delete(dst, false)
-    fs.rename(tmp, dst)
-    ()
+    // the complete tmp stays: readForgetIntent promotes it on the next read
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"renaming $tmp to $dst failed; the forget " +
+        "request stays pending in the tmp intent until the next read promotes it")
   }
 
   /** Order-independent request identity — the

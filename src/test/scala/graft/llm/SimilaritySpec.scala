@@ -1217,8 +1217,7 @@ class SimilaritySpec extends SparkSpec {
     val stale = Similarity.IvfIndex.open(spark, root).vectors
       .filter(col("cell") >= 0) // all rows — content irrelevant, must be overwritten
     stale.select(col("vid"), col("ve"), col("cell")).limit(3)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/deltas/batch=102")
+      .write.mode("overwrite").parquet(s"$root/deltas/batch=102")
     assert(rows() === preCrash, "unrecorded merged dir must be invisible")
     Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 102L)
     assert(rows() === preCrash, "re-run with the crashed id must converge")
@@ -1229,8 +1228,7 @@ class SimilaritySpec extends SparkSpec {
     val garbage = new org.apache.hadoop.fs.Path(s"$root/deltas/batch=55")
     Similarity.IvfIndex.open(spark, root).vectors.limit(2)
       .select(col("vid"), col("ve"), col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(garbage.toString)
+      .write.mode("overwrite").parquet(garbage.toString)
     assert(rows() === preCrash, "committed-but-unlisted garbage must be invisible")
     Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 103L)
     assert(!fs.exists(garbage), "the no-op sweep must remove unlisted garbage")
@@ -1246,6 +1244,131 @@ class SimilaritySpec extends SparkSpec {
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/__purge_inprogress"), false)
       ()
     }
+  }
+
+  /** (data files, `cell=` dirs) directly under a store dir. */
+  private def layoutOf(dir: String): (Int, Seq[String]) = {
+    val children = new java.io.File(dir).listFiles().toSeq
+    (children.count(f => f.isFile && f.getName.endsWith(".parquet")),
+      children.filter(f => f.isDirectory && f.getName.startsWith("cell=")).map(_.getName))
+  }
+
+  test("delta batches are flat: one file per store per append, a flat merged batch, rows unchanged") {
+    val e = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
+    val base = e.filter(pmod(col("vec_id"), lit(4)) === 0)
+    val root = java.nio.file.Files.createTempDirectory("dflat").toString + "/idx"
+    Similarity.IvfIndex.build(base, Similarity.Quantizer.sampled(base), Some(root))
+    Similarity.IvfIndex.open(spark, root).withPq(base, base.count())
+    (1 to 2).foreach { i =>
+      Similarity.IvfIndex.open(spark, root)
+        .append(e.filter(pmod(col("vec_id"), lit(4)) === i), i.toLong)
+    }
+    for (store <- Seq("deltas", "codes_deltas"); b <- 1 to 2)
+      assert(layoutOf(s"$root/$store/batch=$b") === ((1, Nil)), s"$store/batch=$b")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vid"), col("cell")).as[(Long, Int)].collect().toSeq.sorted
+    val idx = Similarity.IvfIndex.open(spark, root)
+    val (vecs, codes) = (rows(idx.vectors), rows(idx.codes))
+    assert(vecs.map(_._1) === e.filter(pmod(col("vec_id"), lit(4)) <= 2)
+      .select("vec_id").as[Long].collect().toSeq.sorted)
+    assert(codes === vecs, "every served vector has its code, in the same cell")
+    idx.compact(mergedBatchId = 100L)
+    for (store <- Seq("deltas", "codes_deltas")) {
+      val (files, cellDirs) = layoutOf(s"$root/$store/batch=100")
+      assert(files >= 1 && cellDirs.isEmpty, s"$store merged batch must be flat")
+    }
+    val compacted = Similarity.IvfIndex.open(spark, root)
+    assert(rows(compacted.vectors) === vecs && rows(compacted.codes) === codes)
+  }
+
+  test("purge of flat delta batches: an all-tombstoned batch serves empty, a crashed batch swap heals") {
+    val e = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
+    def part(i: Int) = e.filter(pmod(col("vec_id"), lit(4)) === i)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.head).as[Long].collect().toSeq.sorted
+    val root = java.nio.file.Files.createTempDirectory("dpurge").toString + "/idx"
+    Similarity.IvfIndex.build(part(0), Similarity.Quantizer.sampled(part(0)), Some(root))
+    val small = part(2).filter(col("vec_id") < 40)
+    Seq(part(1) -> 1L, small -> 2L, part(3) -> 3L).foreach { case (d, b) =>
+      Similarity.IvfIndex.open(spark, root).append(d, b)
+    }
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def vids() = ids(Similarity.IvfIndex.open(spark, root).vectors)
+    def files(b: Int) = new java.io.File(s"$root/deltas/batch=$b").listFiles().map(_.getName).toSet
+    val batch3Files = files(3)
+    // every row of batch 2 and one row of batch 1
+    val tomb = ids(small) :+ ids(part(1)).head
+    Similarity.IvfIndex.open(spark, root).purge(tomb.toDF("vec_id"))
+    val want = (ids(part(0)) ++ ids(part(1)) ++ ids(small) ++ ids(part(3)))
+      .filterNot(tomb.toSet).sorted
+    assert(vids() === want)
+    assert(Similarity.readDeltaManifest(fs, root).get === Seq("batch=1", "batch=2", "batch=3"))
+    assert(spark.read.schema(Similarity.IvfIndex.VectorSchema)
+      .parquet(s"$root/deltas/batch=2").count() === 0L, "batch 2 publishes empty")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/deltas/batch=2/_SUCCESS")))
+    assert(layoutOf(s"$root/deltas/batch=1") === ((1, Nil)), "the rewrite stays flat")
+    assert(files(3) === batch3Files, "a batch without tombstones keeps its files")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/deltas__purging")))
+    // the crash window between DirSwap's renames: batch 1 parked, primary missing
+    val b1 = new org.apache.hadoop.fs.Path(s"$root/deltas/batch=1")
+    val parked = new org.apache.hadoop.fs.Path(s"$root/deltas/batch=1__old")
+    assert(fs.rename(b1, parked))
+    val marker = new org.apache.hadoop.fs.Path(s"$root/__purge_inprogress")
+    fs.create(marker).close()
+    try {
+      assert(vids() === want.filterNot(ids(part(1)).toSet),
+        "marker-up reader must serve exactly the intact batches")
+      assert(fs.exists(parked) && !fs.exists(b1), "reader healed while the purge marker was up")
+      assert(Similarity.servableDeltaDirsListing(fs, root, "deltas")
+        .map(d => new org.apache.hadoop.fs.Path(d).getName).sorted === Seq("batch=2", "batch=3"),
+        "a parked dir is not a batch")
+    } finally { fs.delete(marker, false); () }
+    assert(vids() === want, "the read after the marker heals the parked batch")
+    assert(fs.exists(b1) && !fs.exists(parked))
+  }
+
+  test("a crash between the manifest flip's delete and rename serves the complete tmp") {
+    val e = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
+    def part(i: Int) = e.filter(pmod(col("vec_id"), lit(4)) === i)
+    val root = java.nio.file.Files.createTempDirectory("dflip").toString + "/idx"
+    Similarity.IvfIndex.build(part(0), Similarity.Quantizer.sampled(part(0)), Some(root))
+    (1 to 2).foreach(i => Similarity.IvfIndex.open(spark, root).append(part(i), i.toLong))
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    def vids() = Similarity.IvfIndex.open(spark, root).vectors
+      .select("vid").as[Long].collect().toSeq.sorted
+    // keep the batches compaction folds and then sweeps
+    val side = java.nio.file.Files.createTempDirectory("dflip-side").toString
+    for (b <- 1 to 2) org.apache.hadoop.fs.FileUtil.copy(fs,
+      path(s"$root/deltas/batch=$b"), fs, path(s"$side/batch=$b"), false, conf)
+    Similarity.IvfIndex.open(spark, root).compact(mergedBatchId = 100L)
+    val compacted = vids()
+    // the state of a compaction that died between the flip's delete and
+    // its rename: the merged batch beside the batches it folds, no
+    // manifest, the complete tmp
+    for (b <- 1 to 2) org.apache.hadoop.fs.FileUtil.copy(fs,
+      path(s"$side/batch=$b"), fs, path(s"$root/deltas/batch=$b"), false, conf)
+    val (manifest, tmp) = (path(s"$root/__delta_manifest"), path(s"$root/__delta_manifest.tmp"))
+    assert(fs.rename(manifest, tmp))
+    val served = vids()
+    assert(served === compacted, "the complete tmp must govern the read")
+    assert(served.distinct.size === served.size, "no row may be served twice")
+    // a tmp without its sentinel is a torn write: readers fall back to the listing
+    def writeTmp(text: String): Unit = {
+      val out = fs.create(tmp, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    val complete = java.nio.file.Files.readString(java.nio.file.Paths.get(tmp.toString))
+    writeTmp(complete.linesIterator.filter(_.startsWith("batch=")).mkString("", "\n", "\n"))
+    assert(Similarity.readDeltaManifest(fs, root).isEmpty)
+    writeTmp(complete)
+    // the next commit converges from the tmp's set
+    Similarity.IvfIndex.open(spark, root).append(part(3), 3L)
+    assert(Similarity.readDeltaManifest(fs, root).get === Seq("batch=100", "batch=3"))
+    assert(fs.exists(manifest) && !fs.exists(tmp))
+    assert(vids() === (compacted ++ part(3).select("vec_id").as[Long].collect()).sorted)
   }
 
   test("PQ generation purge: RTBF reaches base codes and code deltas, survivors intact") {

@@ -6,9 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftSparkInternals
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -136,10 +137,28 @@ class IndexServeSpec extends SparkSpec {
 
     IndexLifecycle.serve(spark, lcRoot, queries, 10).collect() // warm-up
     spark.sparkContext.addSparkListener(listener)
-    val (rows, n) =
-      try jobsOf(IndexLifecycle.serve(spark, lcRoot, queries, 10).collect())
-      finally spark.sparkContext.removeSparkListener(listener)
+    val ((served, rows), n) =
+      try jobsOf {
+        val df = IndexLifecycle.serve(spark, lcRoot, queries, 10)
+        (df, df.collect())
+      } finally spark.sparkContext.removeSparkListener(listener)
     assert(n <= 9, s"a warm serve + collect ran $n jobs")
+    // each committed delta batch is one file per store, read whole: a
+    // probed-cell filter there would put the cell list into generated code
+    def deltaScans(p: SparkPlan, store: String): Seq[Long] = p match {
+      case a: AdaptiveSparkPlanExec => deltaScans(a.executedPlan, store)
+      case q: QueryStageExec => deltaScans(q.plan, store)
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.forall(_.getParent.getName == store) =>
+        assert(!f.dataFilters.exists(_.exists {
+          case _: In | _: InSet => true
+          case _ => false
+        }), s"$store: ${f.dataFilters}")
+        Seq(f.metrics("numFiles").value)
+      case other => other.children.flatMap(deltaScans(_, store))
+    }
+    for (store <- Seq("deltas", "codes_deltas"))
+      assert(deltaScans(served.queryExecution.executedPlan, store) === Seq(2L), store)
     assert(rows.length === 24 * 10)
     val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
     assert(got === sorted(referenceServe(g, queries, 10)))
