@@ -2,11 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, Decimal, DoubleType, FloatType}
 
 /** Native Catalyst expression for cosine similarity over `array<float>`
   * embedding columns, with full whole-stage codegen (`doGenCode` emits a
@@ -359,6 +362,120 @@ case class PqAdcTable(child: Expression,
     copy(child = newChild)
 }
 
+/** Native PQ asymmetric DISTANCE of one code against one query's
+  * [[PqAdcTable]] table: Σᵢ dtab(i·kCent + cidᵢ), cidᵢ the unsigned value
+  * of code byte i. It returns what the fixed-order DECIMAL fold it
+  * replaces returns, for every input —
+  * `CAST(aggregate(transform(code, (c, i) -> element_at(dtab, i·kCent +
+  * (CAST(c AS INT) + 256) % 256 + 1)), 0BD, (acc, x) -> CAST(acc + CAST(x
+  * AS DECIMAL(18,6)) AS DECIMAL(18,6))) AS DOUBLE)`:
+  *  - each entry enters as its DECIMAL(18,6) unscaled long: for a 6-dp
+  *    entry below 1e8 (every [[PqAdcTable]] entry) that is
+  *    `Math.round(x·1e6)`, checked by dividing back; any other entry
+  *    goes through Spark's own `Decimal(x).toPrecision(18, 6)`, so NaN
+  *    and infinities are null and a too-large entry overflows, as the
+  *    cast does;
+  *  - the long sum is exact, as a sum of 6-dp decimals is, and a partial
+  *    sum past DECIMAL(18,6) overflows as the fold's cast does;
+  *  - the result is `BigDecimal.valueOf(sum, 6).doubleValue`, which is
+  *    Spark's `Decimal.toDouble`;
+  *  - a null code, a null code element, a null table (over a non-empty
+  *    code) or a null entry gives null; an index past the table fails
+  *    like ANSI `element_at` — before any cast, as `transform` looks
+  *    every entry up first — or is null with ANSI off.
+  * The fold is four HOF lambdas evaluated interpreted per row
+  * (CodegenFallback); this is one codegen'd call. The expression is a
+  * reference object, so neither kCent nor the table enters generated
+  * code: one compiled class serves every generation. Generated code
+  * calls [[dist]], the one implementation, with NaN as its null (the
+  * fold's value is a finite decimal, never NaN).
+  */
+case class PqAdcDist(code: Expression, dtab: Expression, kCent: Int,
+    failOnError: Boolean = SQLConf.get.ansiEnabled) extends BinaryExpression {
+
+  override def left: Expression = code
+  override def right: Expression = dtab
+
+  override def checkInputDataTypes(): TypeCheckResult = (code.dataType, dtab.dataType) match {
+    case (ArrayType(ByteType, _), ArrayType(DoubleType, _)) if kCent >= 1 =>
+      TypeCheckResult.TypeCheckSuccess
+    case (c, t) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<tinyint> and array<double> inputs and kCent >= 1, " +
+        s"got ${c.simpleString} / ${t.simpleString} / $kCent")
+  }
+
+  override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true
+
+  override def prettyName: String = "pq_adc_dist"
+
+  /** Past this unscaled magnitude a sum is no DECIMAL(18,6). */
+  private val MaxUnscaled = 1000000000000000000L
+
+  /** The distance of code `c` over table `t` (null allowed); NaN is null. */
+  def dist(c: ArrayData, t: ArrayData): Double = {
+    val n = c.numElements()
+    if (t == null) return if (n == 0) 0.0 else Double.NaN
+    val size = t.numElements()
+    def at(i: Int) = if (c.isNullAt(i)) -1 else i * kCent + (c.getByte(i) & 0xff)
+    var i = 0
+    while (failOnError && i < n) {
+      if (at(i) >= size) throw Shim.elementAtIndexError(at(i) + 1, size)
+      i += 1
+    }
+    var sum = 0L
+    i = 0
+    while (i < n) {
+      val j = at(i)
+      if (j < 0 || j >= size || t.isNullAt(j)) return Double.NaN
+      val x = t.getDouble(j)
+      val r = Math.round(x * 1e6)
+      if (Math.abs(x) < 1e8 && r / 1e6 == x) sum += r
+      else {
+        val d = try Decimal(x) catch { case _: NumberFormatException => null }
+        val u = if (d == null) null else Shim.toPrecision(d, 18, 6, failOnError)
+        if (u == null) return Double.NaN
+        sum += u.toUnscaledLong
+      }
+      if (sum <= -MaxUnscaled || sum >= MaxUnscaled) {
+        Shim.toPrecision(Decimal(sum, 19, 6), 18, 6, failOnError)
+        return Double.NaN
+      }
+      i += 1
+    }
+    java.math.BigDecimal.valueOf(sum, 6).doubleValue
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val c = code.eval(input)
+    if (c == null) null
+    else {
+      val d = dist(c.asInstanceOf[ArrayData], dtab.eval(input).asInstanceOf[ArrayData])
+      if (d.isNaN) null else d
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pqAdcDist", this, classOf[PqAdcDist].getName)
+    val c = code.genCode(ctx)
+    val t = dtab.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${t.code}
+      |boolean ${ev.isNull} = true;
+      |double ${ev.value} = -1.0;
+      |if (!${c.isNull}) {
+      |  ${ev.value} = $self.dist(${c.value}, ${t.isNull} ? null : ${t.value});
+      |  ${ev.isNull} = Double.isNaN(${ev.value});
+      |}""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(code = newLeft, dtab = newRight)
+}
+
 object VectorExpressions {
   /** Column API for [[CosineSimF32]]. */
   def cosineF32(a: Column, b: Column): Column =
@@ -378,6 +495,10 @@ object VectorExpressions {
     */
   def pqAdcTable(a: Column, cents: Seq[(Long, Long, Seq[Double])]): Column =
     Shim.column(PqAdcTable(Shim.expression(a), byCid(cents)))
+
+  /** Column API for [[PqAdcDist]]: `code` over the [[PqAdcTable]] `dtab`. */
+  def pqAdcDist(code: Column, dtab: Column, kCent: Int): Column =
+    Shim.column(PqAdcDist(Shim.expression(code), Shim.expression(dtab), kCent))
 
   /** Column API for [[UnitF32]]. */
   def unitF32(a: Column): Column = Shim.column(UnitF32(Shim.expression(a)))

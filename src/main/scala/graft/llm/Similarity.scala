@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, IntegerType,
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType,
   LongType, StructField, StructType}
 
 import graft.{OpQuery, Tables}
@@ -898,13 +898,72 @@ object Similarity {
     val CentroidSchema: StructType = StructType(Seq(
       StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
 
-    /** The one centroid read: an index root's `centroids/` (nlist rows,
-      * collected as stored and sorted by cell here).
+    /** The one centroid read: an index root's `centroids/` (nlist rows),
+      * read on the driver with no Spark job ([[readDriverStore]]) and
+      * sorted by cell here.
       */
     private[Similarity] def read(spark: SparkSession, root: String,
         rounded: Boolean): Quantizer =
-      Quantizer(spark.read.schema(CentroidSchema).parquet(s"$root/centroids").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1), rounded)
+      Quantizer(readDriverStore(spark, s"$root/centroids", CentroidSchema)
+        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1), rounded)
+  }
+
+  /** The rows of a parameter-bounded store (`centroids/`, `pqcodebook/`)
+    * read on the driver with parquet-hadoop: one listing and one open per
+    * part file, no Spark job — a committed generation never changes
+    * them, yet every serve and append opens the index anew. Part files
+    * are read in name order, skipping `_`/`.` names as Spark's listing
+    * does; each file's footer schema must convert to `schema` (the
+    * store's typed-read constant) up to nullability, or the read fails
+    * naming the store. Hadoop I/O goes through the session's Hadoop conf,
+    * like a Spark read's.
+    */
+  private def readDriverStore(spark: SparkSession, dir: String,
+      schema: StructType): Seq[org.apache.spark.sql.Row] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    // a list is Spark's three-level LIST group: list → repeated group → element
+    def value(g: Group, field: Int, t: DataType): Any =
+      if (g.getFieldRepetitionCount(field) == 0) null
+      else t match {
+        case IntegerType => g.getInteger(field, 0)
+        case LongType => g.getLong(field, 0)
+        case DoubleType => g.getDouble(field, 0)
+        case ArrayType(et, _) =>
+          val list = g.getGroup(field, 0)
+          (0 until list.getFieldRepetitionCount(0)).map(i => value(list.getGroup(0, i), 0, et))
+      }
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val toSpark = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(st => st.isFile && !Seq("_", ".").exists(st.getPath.getName.startsWith))
+      .sortBy(_.getPath.getName)
+      .flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try {
+          val ps = reader.getFooter.getFileMetaData.getSchema
+          val found = toSpark.convert(ps)
+          // Spark reads every column nullable, whatever the file declares
+          if (!org.apache.spark.sql.graftshim.Shim.sameType(found, schema))
+            throw new IllegalStateException(s"store $dir: ${st.getPath.getName} " +
+              s"holds ${found.simpleString}, not ${schema.simpleString}")
+          val io = new ColumnIOFactory().getColumnIO(ps)
+          Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+            .flatMap { pages =>
+              val records = io.getRecordReader(pages, new GroupRecordConverter(ps))
+              Iterator.fill(pages.getRowCount.toInt) {
+                val g = records.read()
+                org.apache.spark.sql.Row.fromSeq(
+                  schema.fields.indices.map(f => value(g, f, schema(f).dataType)))
+              }
+            }.toVector
+        } finally reader.close()
+      }
   }
 
   /** Top-`k` rows per qid by (sim desc, vid) — the rank every IVF serve ends with. */
@@ -3832,7 +3891,8 @@ object Similarity {
     * no-op.
     *
     * [[IvfIndex.open]] detects the stored shape from the directory
-    * listing; centroids and the PQ codebook are read lazily, once.
+    * listing; centroids and the PQ codebook are read lazily, once per
+    * opened index, on the driver with no Spark job ([[readDriverStore]]).
     * Routing follows the quantizer strategy the caller names:
     * [[IvfIndex.open]] routes sampled, [[IvfIndex.openReplayable]]
     * rounded ([[Quantizer.replayable]] roots); SQ8 roots always route
@@ -3848,12 +3908,12 @@ object Similarity {
       known.getOrElse(Quantizer.read(spark, root, rounded))
 
     /** The PQ codebook in [[pqTrain]]'s (ss, cid, centroid) form —
-      * parameter-bounded (mSub·kCent rows).
+      * parameter-bounded (mSub·kCent rows), read on the driver with no
+      * Spark job ([[readDriverStore]]) and sorted by (ss, cid) here.
       */
     private lazy val pqCodebook: Seq[(Long, Long, Seq[Double])] =
-      spark.read.schema(IvfIndex.CodebookSchema).parquet(s"$root/pqcodebook").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toSeq)).toSeq
-        .sortBy(c => (c._1, c._2))
+      readDriverStore(spark, s"$root/pqcodebook", IvfIndex.CodebookSchema)
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).sortBy(c => (c._1, c._2))
 
     private lazy val fs =
       new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
@@ -3944,16 +4004,17 @@ object Similarity {
       * returns the probed-cell pruning list, the probes and the query
       * rows, which enter the final plan as LocalRelations: the final
       * action never re-runs routing over the query scan, and planning
-      * runs no job beyond that collect and the index's own small reads
-      * (centroids, codebook — typed, collected unsorted, sorted here).
+      * runs no job beyond that collect (the centroids and the codebook
+      * are read on the driver, [[readDriverStore]]).
       * Per codec:
       *  - Flat: exact cosine over the probed cells' vectors;
       *  - Pq: asymmetric distance over the probed cells' codes — each
       *    query's lookup table (mSub·kCent exact 6-dp subdistances) is
       *    computed in the collect by the codegen'd
-      *    [[graft.functions.PqAdcTable]] and broadcasts as ONE array; the
-      *    ADC sum is a fixed-order DECIMAL fold over the code array
-      *    (partial-sum order cannot flip a rank) — then the ADC
+      *    [[graft.functions.PqAdcTable]] and broadcasts as ONE array; each
+      *    code's ADC sum is the codegen'd [[graft.functions.PqAdcDist]],
+      *    an exact DECIMAL(18,6) sum over the code array (partial-sum
+      *    order cannot flip a rank) — then the ADC
       *    top-`rerankFactor·k` re-ranks exactly against the vector store,
       *    read pruned to the probed cells and joined on vid: serving
       *    memory holds codes, never the float corpus;
@@ -3963,7 +4024,7 @@ object Similarity {
       */
     def serve(queries: DataFrame, k: Int, nprobe: Option[Int] = None,
         rerankFactor: Int = 8): DataFrame = {
-      import graft.functions.VectorExpressions.{arrayDot, pqAdcTable}
+      import graft.functions.VectorExpressions.{arrayDot, pqAdcDist, pqAdcTable}
       val routed = quantizer.route(queries,
         nprobe.getOrElse(deriveNprobe(quantizer.nlist)))
       def probedVectors(cells: Seq[Int]) = readStore(vectorStore, "deltas", Some(cells))
@@ -3989,13 +4050,7 @@ object Similarity {
             .filter(col("vid") =!= col("qid"))
             .join(broadcast(side.select(col("qid"), col("dtab"))), Seq("qid"))
             .select(col("qid"), col("vid"), col("cell"),
-              // codes are SIGNED bytes holding unsigned cids: +256 wrap
-              expr(s"""CAST(aggregate(
-                transform(code, (c, i) -> element_at(dtab,
-                  i * $kCent + ((CAST(c AS INT) + 256) % 256) + 1)),
-                CAST(0 AS DECIMAL(18,6)),
-                (acc, x) -> CAST(acc + CAST(x AS DECIMAL(18,6)) AS DECIMAL(18,6)))
-                AS DOUBLE)""").as("adist"))
+              pqAdcDist(col("code"), col("dtab"), kCent).as("adist"))
           val wA = Window.partitionBy(col("qid")).orderBy(col("adist"), col("vid"))
           val top = adc.withColumn("rn", row_number().over(wA))
             .filter(col("rn") <= rerankFactor.toLong * k).drop("rn")

@@ -45,6 +45,27 @@ object Shim {
   def analysisException(msg: String): org.apache.spark.sql.AnalysisException =
     new PlainAnalysisException(msg)
 
+  /** `element_at`'s ANSI out-of-bounds error (1-based `index`), for native
+    * expressions that replace an `element_at` lookup and must fail as it
+    * does.
+    */
+  def elementAtIndexError(index: Int, numElements: Int): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .invalidElementAtIndexError(index, numElements, null)
+
+  /** `d` at DECIMAL(`precision`, `scale`), rounded HALF_UP, as Spark's
+    * cast to that type: null on overflow, or with `failOnError` (ANSI)
+    * the cast's overflow error.
+    */
+  def toPrecision(d: org.apache.spark.sql.types.Decimal, precision: Int, scale: Int,
+      failOnError: Boolean): org.apache.spark.sql.types.Decimal =
+    d.toPrecision(precision, scale, org.apache.spark.sql.types.Decimal.ROUND_HALF_UP,
+      !failOnError, null)
+
+  /** Spark's type equality up to nullability (`DataType.sameType`). */
+  def sameType(a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
+
   /** Materialize a logical plan as a DataFrame (test support for optimizer
     * rules; `Dataset.ofRows` is `private[sql]`).
     */

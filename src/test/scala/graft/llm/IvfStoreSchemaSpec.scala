@@ -48,4 +48,13 @@ class IvfStoreSchemaSpec extends SparkSpec {
       assert(inferred(dir) === schema, s"$dir")
     }
   }
+
+  test("a centroid store of another schema fails the driver read, naming the store") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("schema-bad").toString + "/ix"
+    Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cell", "centroid")
+      .write.parquet(s"$root/centroids")
+    val e = intercept[IllegalStateException](IvfIndex.open(spark, root).quantizer)
+    assert(e.getMessage.contains(s"$root/centroids"), e.getMessage)
+  }
 }

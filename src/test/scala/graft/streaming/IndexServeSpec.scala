@@ -3,9 +3,12 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftSparkInternals
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{GraftSparkInternals, SparkThrowable}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -13,21 +16,23 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, LongType,
+  StructField, StructType}
 
 import graft.{SparkSpec, Tables}
-import graft.functions.VectorExpressions.{pqAdcTable, unitF32}
+import graft.functions.VectorExpressions.{pqAdcDist, pqAdcTable, unitF32}
 import graft.llm.Similarity
 import graft.llm.Similarity.{Codec, IvfIndex, Quantizer}
 
 /** Fixed cost of a warm index serve — `IndexLifecycle.serve` + collect on
   * a PQ generation with committed deltas, the benchmark's `index_batch`
-  * op. Planning reads the centroids and the codebook typed and unsorted
-  * and routes the queries in one collect that also computes their ADC
-  * tables, so the serve runs no schema-inference, sampling or table
-  * shuffle job. The rows are pinned to the formulation before that
-  * change: lazily routed probes and the explode × codebook join →
-  * `groupBy` ADC table, kept here as the reference.
+  * op. Planning reads the centroids and the codebook on the driver with
+  * no job and routes the queries in one collect that also computes their
+  * ADC tables, so the serve runs no schema-inference, sampling, table
+  * shuffle or artifact job. The rows are pinned to the formulation
+  * before that change: lazily routed probes, the explode × codebook
+  * join → `groupBy` ADC table and the DECIMAL fold, kept here as the
+  * reference.
   */
 class IndexServeSpec extends SparkSpec {
   import spark.implicits._
@@ -81,6 +86,14 @@ class IndexServeSpec extends SparkSpec {
         x => (x / greatest(col("__n"), lit(1e-30))).cast("float")).as("embedding"))
   }
 
+  /** The fixed-order DECIMAL fold over (code, dtab) that [[pqAdcDist]] replaced. */
+  private def adcFold(kCent: Int): Column = expr(s"""CAST(aggregate(
+      transform(code, (c, i) -> element_at(dtab,
+        i * $kCent + ((CAST(c AS INT) + 256) % 256) + 1)),
+      CAST(0 AS DECIMAL(18,6)),
+      (acc, x) -> CAST(acc + CAST(x AS DECIMAL(18,6)) AS DECIMAL(18,6)))
+      AS DOUBLE)""")
+
   private def codebookOf(root: String): Seq[(Long, Long, Seq[Double])] =
     spark.read.parquet(s"$root/pqcodebook").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toSeq)).toSeq
@@ -102,12 +115,7 @@ class IndexServeSpec extends SparkSpec {
       .join(broadcast(routed.select(col("qid"), col("cell"))), Seq("cell"))
       .filter(col("vid") =!= col("qid"))
       .join(broadcast(qt), Seq("qid"))
-      .select(col("qid"), col("vid"), expr(s"""CAST(aggregate(
-          transform(code, (c, i) -> element_at(dtab,
-            i * $kCent + ((CAST(c AS INT) + 256) % 256) + 1)),
-          CAST(0 AS DECIMAL(18,6)),
-          (acc, x) -> CAST(acc + CAST(x AS DECIMAL(18,6)) AS DECIMAL(18,6)))
-          AS DOUBLE)""").as("adist"))
+      .select(col("qid"), col("vid"), adcFold(kCent).as("adist"))
     val wA = Window.partitionBy(col("qid")).orderBy(col("adist"), col("vid"))
     val top = adc.withColumn("rn", row_number().over(wA)).filter(col("rn") <= 8L * k)
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vid"))
@@ -122,11 +130,18 @@ class IndexServeSpec extends SparkSpec {
   private def sorted(df: DataFrame): Seq[(Long, Long, Double)] =
     df.select("qid", "vid", "sim").as[(Long, Long, Double)].collect().toSeq.sorted
 
-  test("a warm serve of a generation with two deltas runs at most 9 jobs, rows as before") {
-    val lcRoot = Files.createTempDirectory("idx-serve").toString + "/lc"
-    // modulus 5 keeps every split a uniform sample across the fixture's
-    // clusters, so the ticks append instead of retraining
+  /** A lifecycle initialized on every fifth fixture vector; modulus 5
+    * keeps each later split a uniform sample across the fixture's
+    * clusters, so ticks append instead of retraining.
+    */
+  private def lifecycle(prefix: String): String = {
+    val lcRoot = Files.createTempDirectory(prefix).toString + "/lc"
     IndexLifecycle.init(spark, lcRoot, emb.filter(col("vec_id") % 5 === 0))
+    lcRoot
+  }
+
+  test("a warm serve of a generation with two deltas runs at most 7 jobs, rows as before") {
+    val lcRoot = lifecycle("idx-serve")
     (1 to 2).foreach { i =>
       assert(!IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === i), i.toLong))
     }
@@ -142,7 +157,7 @@ class IndexServeSpec extends SparkSpec {
         val df = IndexLifecycle.serve(spark, lcRoot, queries, 10)
         (df, df.collect())
       } finally spark.sparkContext.removeSparkListener(listener)
-    assert(n <= 9, s"a warm serve + collect ran $n jobs")
+    assert(n <= 7, s"a warm serve + collect ran $n jobs")
     // each committed delta batch is one file per store, read whole: a
     // probed-cell filter there would put the cell list into generated code
     def deltaScans(p: SparkPlan, store: String): Seq[Long] = p match {
@@ -196,6 +211,117 @@ class IndexServeSpec extends SparkSpec {
     }
   }
 
+  test("a warm non-cutover tick runs at most 9 jobs") {
+    val lcRoot = lifecycle("idx-tick")
+    assert(!IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 1), 1L))
+    spark.sparkContext.addSparkListener(listener)
+    val (cutover, n) =
+      try jobsOf(IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 2), 2L))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(!cutover)
+    // the drift check's PSI head, the two stores' shuffle + write, and
+    // no centroid or codebook read
+    assert(n <= 9, s"a warm append tick ran $n jobs")
+  }
+
+  test("a warm serve after one more append compiles nothing") {
+    val lcRoot = lifecycle("idx-compile")
+    assert(!IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 1), 1L))
+    // queries arrive as local rows (a filtered frame's own predicate
+    // would compile per literal); the second serve probes other cells
+    val Seq(first, second) = Seq(col("vec_id") < 24, col("vec_id").between(24, 47)).map { p =>
+      val df = emb.filter(p)
+      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    }
+    // the first serve over a delta compiles the union's shape
+    IndexLifecycle.serve(spark, lcRoot, first, 10).collect()
+    assert(!IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 2), 2L))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val rows = IndexLifecycle.serve(spark, lcRoot, second, 10).collect()
+    assert(rows.length === 24 * 10)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles === 0L,
+      "a warm serve of a seen shape compiled generated code (a per-serve literal?)")
+  }
+
+  private val adcSchema = StructType(Seq(StructField("id", LongType),
+    StructField("code", ArrayType(ByteType)), StructField("dtab", ArrayType(DoubleType))))
+
+  /** id → raw bits of (fold, kernel) over (id, code, dtab) `rows` at `kCent`,
+    * interpreted on the LocalRelation and generated after a repartition.
+    */
+  private def adcBoth(kCent: Int, rows: Seq[Row]): Seq[Map[Long, (Option[Long], Option[Long])]] = {
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), adcSchema)
+    def bits(r: Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    Seq(df, df.repartition(2)).map(_.select(col("id"), adcFold(kCent),
+        pqAdcDist(col("code"), col("dtab"), kCent))
+      .collect().map(r => r.getLong(0) -> (bits(r, 1), bits(r, 2))).toMap)
+  }
+
+  /** The error condition `body` fails with (the cause chain's first). */
+  private def condition(body: => Any): String = {
+    val e = intercept[Throwable](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
+      .getOrElse(fail(s"no error condition in $e"))
+  }
+
+  test("PqAdcDist is bit-identical to the DECIMAL fold") {
+    val rng = new scala.util.Random(13L)
+    def sixDp(x: Double) = java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    // a trained kCent and a trailing small codebook's
+    for (kCent <- Seq(256, 37)) {
+      val rows = (0 until 512).map { i =>
+        // PqAdcTable's 6-dp squared distances; 6-dp entries past the fast
+        // path's 1e8; raw doubles over twelve magnitudes, 6-dp halves among them
+        val entry: () => Double = i % 4 match {
+          case 0 | 1 => () => sixDp(rng.nextDouble() * 4)
+          case 2 => () => sixDp((rng.nextDouble() - 0.5) * 2e9)
+          case _ => () => if (rng.nextInt(8) == 0) (rng.nextInt(1000) + 0.5) / 1e6
+            else rng.nextDouble() * math.pow(10, rng.nextInt(12) - 6)
+        }
+        Row(i.toLong, Seq.fill(16)(rng.nextInt(kCent).toByte), Seq.fill(16 * kCent)(entry()))
+      }
+      for (got <- adcBoth(kCent, rows)) {
+        assert(got.size === 512)
+        got.foreach { case (id, (want, have)) =>
+          assert(want.isDefined && have === want, s"row $id, kCent $kCent")
+        }
+      }
+    }
+  }
+
+  test("PqAdcDist: nulls, NaN and infinities as the fold; errors as the ANSI fold") {
+    val tab = Seq(0.5, 1.25, 2.0, 0.75, 3.5, 0.125, 1.0, 2.5)
+    val edge = Seq(
+      Row(0L, null, tab), Row(1L, Seq[Byte](1, 2), null), Row(2L, Seq[Byte](), null),
+      Row(3L, Seq[Byte](), tab), Row(4L, Seq[Any](1.toByte, null), tab),
+      Row(5L, Seq[Byte](0, 1), Double.NaN +: tab.tail),
+      Row(6L, Seq[Byte](0, 1), Double.PositiveInfinity +: tab.tail),
+      Row(7L, Seq[Byte](0, 1), Seq[Any](null) ++ tab.tail), Row(8L, Seq[Byte](3, 2), tab))
+    for (got <- adcBoth(4, edge)) {
+      assert(got.size === edge.size)
+      got.foreach { case (id, (want, have)) => assert(have === want, s"row $id") }
+      assert(got.collect { case (id, (Some(_), _)) => id }.toSet === Set(2L, 3L, 8L))
+    }
+    // (kCent, row): a cid past the table, an entry and a sum past DECIMAL(18,6)
+    val failing = Seq(4 -> Row(0L, Seq[Byte](0, 5), tab), 1 -> Row(0L, Seq[Byte](0), Seq(1e13)),
+      1 -> Row(0L, Seq[Byte](0, 0), Seq(9e11, 9e11)))
+    for ((kCent, row) <- failing) {
+      val df = spark.createDataFrame(java.util.Arrays.asList(row), adcSchema)
+      for (d <- Seq(df, df.repartition(2))) {
+        val want = condition(d.select(adcFold(kCent)).collect())
+        assert(condition(d.select(pqAdcDist(col("code"), col("dtab"), kCent)).collect()) === want)
+      }
+    }
+    // with ANSI off the same inputs are null on both sides
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try failing.foreach { case (kCent, row) =>
+      adcBoth(kCent, Seq(row)).foreach(got => assert(got === Map(0L -> (None, None))))
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
+  }
+
   test("UnitF32 is bit-identical to the transform normalization") {
     val rng = new scala.util.Random(12L)
     val schema = StructType(Seq(StructField("vec_id", LongType),
@@ -219,7 +345,7 @@ class IndexServeSpec extends SparkSpec {
     * an entry removes the entry.
     */
   private val ServeCodegenFallbacks =
-    Set("aggregate", "transform", "lambdafunction", "namedlambdavariable")
+    Set("transform", "lambdafunction", "namedlambdavariable")
 
   test("serve plans: no exchange on the query side, codegen fallbacks only from the allowlist") {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
