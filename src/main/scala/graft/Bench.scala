@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, forcing full materialization of all output
   * columns via a noop-format write (a bare `count()` would let Catalyst
@@ -123,7 +121,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val maxReps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     // 271 (r19): 265 was settled for the 216-entry registry (PLANS r18);
     // r19 adds s29_lateral_ann_sql — the r18 verdict's #1 as a registry
@@ -132,36 +130,7 @@ object Bench {
     // midpoint, the same honest-growth rule as 210 → 240 → 265.
     // PLANS.md r19 carries the pricing.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "271").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r20 (guide §6): don't launch a DISTRIBUTED listing job for a
-      // store with a few dozen partition dirs — the default threshold
-      // (32 paths) sits just under this engine's √N cell counts, so
-      // every read of a cell-partitioned index store paid one extra
-      // 32-task job to list ~45 local directories. Serial driver
-      // listing is faster up to hundreds of paths on any filesystem;
-      // deployments scanning thousands of object-store partitions
-      // should lower it again (it stays an ordinary spark conf).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      // r21 (guide §1.2 step 2 — per-"task" work, here the driver's):
-      // the generated-class cache (CodeGenerator) holds 100 entries by
-      // default; a session serving this engine's 217-operator surface
-      // compiles far more distinct codegen units than that, so every
-      // re-run of a plan behind ~100 other plans re-pays Janino
-      // compilation (~0.05-0.3 s per unit) that the cache exists to
-      // amortize. Sized to the surface, not the host — a production
-      // driver serving the same operator registry wants the same cache.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // the engine's SQL surface — s29's lateral serving needs the
-      // resolution rule, which only a session build can inject
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     // Input pre-touch (protocol step 1): full-column scans, timed.
     val touchT0 = System.nanoTime()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Builder tooling: dump `.explain("formatted")` for named registry
   * queries to files — the plans/rNN before/after evidence the
@@ -14,16 +13,7 @@ object ExplainDump {
     val outDir = args(0)
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     new java.io.File(outDir).mkdirs()
     val selected =
       if (names == Seq("all")) SparkEntry.registry

@@ -43,9 +43,6 @@ import org.apache.spark.sql.SparkSession
   * | `spark.graft.sink.healWaitMs` | 10000 | composed-sink readers: wait
   *   this long for a live purge swap (marker present, primary mid-swap)
   *   before treating the marker as stale and healing the swap |
-  *
-  * The legacy `graft.spill.ttl.minutes` JVM sysprop is honored as a
-  * fallback (it predates this surface); the SparkConf key wins.
   */
 object GraftConfig {
 
@@ -53,9 +50,7 @@ object GraftConfig {
   val LedgerCompactEveryKey = "spark.graft.ledger.compact.every"
 
   def spillTtlMinutes(spark: SparkSession): Long =
-    spark.conf.getOption(SpillTtlKey)
-      .orElse(sys.props.get("graft.spill.ttl.minutes"))
-      .map(_.trim.toLong).getOrElse(60L)
+    spark.conf.getOption(SpillTtlKey).map(_.trim.toLong).getOrElse(60L)
 
   /** None = no automatic ledger compaction (append-only until the
     * caller compacts); Some(n ≥ 1) = compact every n-th tick.

@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned session factory for the engine. The driver harness builds its own
-  * sessions (Verify/Bench honor its env contract); library users get the
-  * scale posture here. Engine lifecycle knobs (spill-dir retention,
-  * streaming-ledger compaction cadence) are ordinary `spark.graft.*`
-  * conf keys — see [[GraftConfig]] for the documented surface; set them
-  * on this builder like any other Spark setting.
+/** The engine's one session factory: every session the engine's mains
+  * and tests run on is built here, and its confs are set nowhere else.
+  * Engine lifecycle knobs (spill-dir retention, streaming-ledger
+  * compaction cadence) are ordinary `spark.graft.*` conf keys — see
+  * [[GraftConfig]] for the documented surface; set them on this builder
+  * like any other Spark setting.
   */
 object GraftSession {
 
@@ -47,9 +47,28 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
-  /** Local session for tools/tests. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession =
-    builder(shufflePartitions = cores).master(s"local[$cores]")
+  /** The local session of the engine's mains and tests: [[builder]] on
+    * `local[cores]` with the UI off and `extra` applied LAST (so a gate
+    * run can override a default), logging at WARN.
+    */
+  def local(cores: Int, extra: Seq[(String, String)] = Nil): SparkSession = {
+    val b = builder(shufflePartitions = cores).master(s"local[$cores]")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = extra.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Extra session confs from `SPARK_GRAFT_CONF="key=value;key=value"`
+    * (Verify and PerfProbe) — e.g. `spark.sql.codegen.fallback=false`
+    * re-gates the whole registry with interpreted fallback disabled,
+    * proving every custom codegen'd expression actually compiles.
+    */
+  def envConf: Seq[(String, String)] = sys.env.get("SPARK_GRAFT_CONF")
+    .toSeq.flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
+    .map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      (kv.take(i), kv.drop(i + 1))
+    }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Builder-side micro-harness: time a handful of named registry queries
   * at sf0.1 with warm reps, Bench-style (pre-touched inputs, noop-write
@@ -8,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.PerfProbe t28_bm25 d5_ngram_jaccard"`. The
   * driver never runs this; Bench stays the artifact of record.
   *
-  * r20: builds the session withExtensions (the measured Bench session
-  * shape — s29 needs the resolution rule) and, when SPARK_GRAFT_JOBS=1,
+  * r20: runs on the measured Bench session shape (s29 needs the
+  * resolution rule) and, when SPARK_GRAFT_JOBS=1,
   * prints a per-JOB breakdown of the final warm rep (job id, duration,
   * description) — the local-mode substitute for the Spark UI's job
   * table, which is what guide §1.1's empirical loop needs here.
@@ -20,26 +19,7 @@ object PerfProbe {
     val jobBreakdown = sys.env.get("SPARK_GRAFT_JOBS").contains("1")
     // builder tooling: SPARK_GRAFT_CONF="k=v;k=v" A/Bs session confs on
     // named entries without a full bench take (same syntax as Verify)
-    val extraConf: Seq[(String, String)] = sys.env.get("SPARK_GRAFT_CONF")
-      .toSeq.flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
-        (kv.take(i), kv.drop(i + 1))
-      }
-    val base = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .withExtensions(new GraftExtensions()(_))
-    val spark = extraConf.foldLeft(base) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, GraftSession.envConf)
 
     // per-job timing listener: collects (jobId, submitted→completed ms,
     // description) so a slow entry's time can be attributed to its

@@ -76,24 +76,28 @@ object Tables {
             s"$fam family — did the driver regenerate testdata with a new encoding?")
     }
 
-  /** Per-session resolved-relation memo — CATALOG metadata, not data.
-    * `spark.read.parquet(path)` re-lists the directory and re-reads a
-    * footer for schema inference on EVERY call; a catalog-backed engine
-    * resolves a table once per session and reuses the relation (what
-    * `saveAsTable`/HMS users get for free — Spark's own
-    * filesourceTableRelationCacheSize exists for exactly this). The memo
-    * holds the resolved LOGICAL PLAN only: every action against it still
-    * scans the parquet files — no rows, aggregates, or intermediates are
-    * retained (and the input star schema is immutable by the driver
-    * contract, so the cached file listing cannot go stale). Keyed by
-    * session so tests with per-suite sessions and the multi-SF gates
-    * never share state.
+  /** A star-schema table, resolved once per session — CATALOG metadata,
+    * not data. `spark.read.parquet(path)` re-lists the directory and
+    * re-reads a footer for schema inference on EVERY call; a
+    * catalog-backed engine resolves a table once per session and reuses
+    * the relation (what `saveAsTable`/HMS users get for free — Spark's
+    * own filesourceTableRelationCacheSize exists for exactly this). The
+    * memo holds the resolved LOGICAL PLAN only: every action against it
+    * still scans the parquet files — no rows, aggregates, or
+    * intermediates are retained (and the input star schema is immutable
+    * by the driver contract, so the cached file listing cannot go
+    * stale). It lives in the context's [[EngineState]], keyed by
+    * (session, dir, name), and is evicted when the context stops: a dir
+    * regenerated in place under a live context keeps serving the first
+    * listing and schema check until then.
+    *
+    * Callers share the returned instance: two raw results of one
+    * accessor joined with `df("col")` conditions carry the same
+    * attribute ids, and rely on Spark's self-join dedup to tell the
+    * sides apart — alias both sides before such a join.
     */
-  private val relationMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    relationMemo.computeIfAbsent((spark, dir, name), { _ =>
+    EngineState.of(spark).relations.computeIfAbsent((spark, dir, name), { _ =>
       val df = spark.read.parquet(s"$dir/$name.parquet")
       validate(name, df.schema)
       df
@@ -151,25 +155,8 @@ object Tables {
     */
   def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (scanParts(df) < target) df.repartition(target) else df
-  }
-
-  /** `df.rdd.getNumPartitions` runs the full Catalyst pipeline (analyze →
-    * optimize → physical plan → RDD DAG) just to read a partition count;
-    * with [[table]] memoized the SAME DataFrame instance recurs, so the
-    * count is memoized per instance (weak identity keys — derived frames
-    * are planned once and dropped with the frame).
-    */
-  private val partsMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Integer]())
-  private def scanParts(df: DataFrame): Int = {
-    val cached = partsMemo.get(df)
-    if (cached != null) cached.intValue()
-    else {
-      val n = df.rdd.getNumPartitions
-      partsMemo.put(df, Integer.valueOf(n))
-      n
-    }
+    // one planning per table instance: `rdd` is a lazy val on a Dataset
+    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
   /** Name-based loader that routes through the schema-aware accessors

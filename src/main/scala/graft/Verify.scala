@@ -1,42 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Builder tooling (the driver never sets it): extra session confs as
-    // "key=value;key=value" — e.g. SPARK_GRAFT_CONF=
-    // "spark.sql.codegen.fallback=false" re-gates the WHOLE registry with
-    // interpreted fallback disabled, proving every custom codegen'd
-    // expression actually compiles (the BloomProbe bug class).
-    val extraConf: Seq[(String, String)] = sys.env.get("SPARK_GRAFT_CONF")
-      .toSeq.flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
-        (kv.take(i), kv.drop(i + 1))
-      }
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r20: see Bench — serial driver listing for few-dozen-dir stores
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      // r21: see Bench — codegen class cache sized to the 217-plan surface
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // the engine's SQL surface (functions, TVFs, the r19 lateral
-      // resolution rule) — s29 exercises it under the oracle gate
-      .withExtensions(new GraftExtensions()(_))
-    // extras applied LAST so a gate run can override a default
-    val spark = extraConf.foldLeft(base) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // builder tooling (the driver never sets it): SPARK_GRAFT_CONF extras
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, GraftSession.envConf)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (builder tooling; the driver never sets it):
     // SPARK_GRAFT_ONLY=q65_sessionize,t17_bigram_logprob dumps just those.

@@ -292,8 +292,7 @@ object Dedup {
     // reference re-executes the sha256 signature chains — measured 3×
     // the whole-query cost at sf0.1. The streaming form gets the same
     // boundary for free (its ledger IS parquet).
-    val artDir = trackSpill(
-      s"${spillBase(spark, spillDir, "incrementalNearDup")}/${runDirName("incart")}")
+    val artDir = spillRun(spark, spillDir, "incrementalNearDup", "incart")
     dedupIndexArtifacts(docs)
       .join(docs.select(col("doc_id"), snapshotPred.as("__ledger")), Seq("doc_id"))
       .write.mode("overwrite").parquet(artDir)
@@ -384,7 +383,7 @@ object Dedup {
     require(nBatches >= 1, s"nBatches must be >= 1, got $nBatches")
     val spark = docs.sparkSession
     val base = spillBase(spark, spillDir, "incrementalNearDupBatches")
-    val artDir = trackSpill(s"$base/${runDirName("incartb")}")
+    val artDir = trackSpill(spark, s"$base/${runDirName("incartb")}")
     dedupIndexArtifacts(docs)
       .join(docs.select(col("doc_id"), snapshotPred.as("__ledger"),
         when(snapshotPred, lit(-1)).otherwise(batchOf).as("__batch")),
@@ -417,7 +416,7 @@ object Dedup {
     // production shape (N in the hundreds) an N-way union's analysis
     // cost grows with every tick while this stays flat, the same
     // artifact-spill pattern the input side of this function uses.
-    val verDir = trackSpill(s"$base/${runDirName("incverb")}")
+    val verDir = trackSpill(spark, s"$base/${runDirName("incverb")}")
     (0 until nBatches).foreach { k =>
       val streamArt = flagged.filter(col("__batch") === k)
         .drop("__ledger", "__batch")
@@ -750,8 +749,7 @@ object Dedup {
   def incrementalClosure(docs: DataFrame, snapshotPred: Column,
       nTicks: Int = 2, spillDir: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
-    val runDir = trackSpill(
-      s"${spillBase(spark, spillDir, "incrementalClosure")}/${runDirName("incart")}")
+    val runDir = spillRun(spark, spillDir, "incrementalClosure", "incart")
     dedupIndexArtifacts(docs)
       .join(docs.select(col("doc_id"), snapshotPred.as("__ledger")), Seq("doc_id"))
       .write.mode("overwrite").parquet(s"$runDir/art")
@@ -1288,7 +1286,7 @@ object Dedup {
     // narrow-column artifact write (the t20 discipline; released by
     // Verify/Bench per query). Wall-neutral at test SFs, measured.
     val spark = df.sparkSession
-    val dir = trackSpill(s"${spillBase(spark, None, "capBuckets")}/${runDirName("cap")}")
+    val dir = spillRun(spark, None, "capBuckets", "cap")
     df.write.mode("overwrite").parquet(dir)
     val mat = spark.read.parquet(dir)
     val small = mat.groupBy(keys.map(col): _*)
@@ -1380,8 +1378,7 @@ object Dedup {
       get(col(s"c${k / 4}"), lit(k % 4)).as(s"h$k")): _*)
     val aggs = (0 until MinhashK).map(k => min(col(s"h$k")).as(s"m$k")) :+
       collect_set(col("gh")).as("sh")
-    val artDir = trackSpill(
-      s"${spillBase(spark, spillDir, "lshDiagnostics")}/${runDirName("lshdiag")}")
+    val artDir = spillRun(spark, spillDir, "lshDiagnostics", "lshdiag")
     hs.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(artDir)
     val art = spark.read.parquet(artDir)
@@ -1539,7 +1536,7 @@ object Dedup {
     prefix
   }
 
-  private[graft] def runDirName(prefix: String): String =
+  private def runDirName(prefix: String): String =
     s"${spillPrefix(prefix)}-$sessionTag-${java.util.UUID.randomUUID()}"
 
   /** A DETERMINISTIC session-scoped dir name (no UUID): same prefix +
@@ -1551,38 +1548,35 @@ object Dedup {
   private[graft] def sessionDirName(prefix: String, name: String): String =
     s"${spillPrefix(prefix)}-$sessionTag-$name"
 
-  /** Run dirs created by THIS session whose returned plans may still be
-    * live (the cc-/tok-/snm- spills). Recorded at creation so
-    * [[releaseSpills]] can reclaim them on the caller's say-so; other
-    * processes' leftovers belong to the TTL pruner / retention policy.
+  /** Record a run dir whose returned plans may still be live (the
+    * cc-/tok-/snm- spills) in the context's [[graft.EngineState]], so
+    * [[releaseSpills]] can reclaim it on the caller's say-so and the
+    * context's stop reclaims it otherwise; other processes' leftovers
+    * belong to the TTL pruner / retention policy.
     */
-  private val liveSpills = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private def trackSpill(spark: SparkSession, dir: String): String = {
+    graft.EngineState.of(spark).spills.add(dir); dir
+  }
 
-  private[graft] def trackSpill(dir: String): String = { liveSpills.add(dir); dir }
+  /** A fresh run dir `<spill base>/<prefix>-<tag>-<uuid>` for `what`,
+    * tracked as by [[trackSpill]]. */
+  private[graft] def spillRun(spark: SparkSession, spillDir: Option[String],
+      what: String, prefix: String): String =
+    trackSpill(spark, s"${spillBase(spark, spillDir, what)}/${runDirName(prefix)}")
 
-  /** Delete every spill directory this session has created so far. The
-    * CALLER asserts the plans those spills back are fully consumed — a
-    * released plan re-collected afterwards fails on missing files
-    * (loudly, never silently wrong). Verify/Bench call this after each
-    * query's output is materialized, so repeated invocations of
+  /** Delete every spill directory this session's context has created so
+    * far (a `foreachBatch` clone's spills included). The CALLER asserts
+    * the plans those spills back are fully consumed — a released plan
+    * re-collected afterwards fails on missing files (loudly, never
+    * silently wrong). Verify/Bench call this after each query's output
+    * is materialized, so repeated invocations of
     * [[corpusCleanFull]]/[[dedupClusters]] in one session do not
     * accumulate one tokenized-corpus copy per call. Never throws; a dir
     * that cannot be deleted stays for the retention policy. Returns the
     * number of directories removed.
     */
-  def releaseSpills(spark: SparkSession): Int = {
-    var n = 0
-    var dir = liveSpills.poll()
-    while (dir != null) {
-      try {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p) && fs.delete(p, true)) n += 1
-      } catch { case scala.util.control.NonFatal(_) => () }
-      dir = liveSpills.poll()
-    }
-    n
-  }
+  def releaseSpills(spark: SparkSession): Int =
+    graft.EngineState.of(spark).releaseSpills()
 
   /** Best-effort GC of ABANDONED run dirs under the TMPDIR-FALLBACK spill
     * base (explicit spillDir / checkpoint dirs are caller-owned and never
@@ -1591,8 +1585,8 @@ object Dedup {
     * lazily), so without this the local-mode fallback accumulates one
     * tokenized corpus copy per call across repeated runs/tests. Deletes
     * only dirs that are (a) NOT this JVM's (live plans here may still
-    * read theirs) and (b) older than `graft.spill.ttl.minutes` (default
-    * 60) — in /tmp that old means a dead process. Never throws.
+    * read theirs) and (b) older than `spark.graft.spill.ttl.minutes`
+    * (default 60) — in /tmp that old means a dead process. Never throws.
     */
   private[llm] def pruneStaleRuns(spark: SparkSession, base: String): Unit =
     try {
@@ -1623,8 +1617,7 @@ object Dedup {
   def dedupClusters(pairs: DataFrame, maxRounds: Int = 50,
       spillDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    val base = spillBase(spark, spillDir, "dedupClusters")
-    val runDir = trackSpill(s"$base/${runDirName("cc")}")
+    val runDir = spillRun(spark, spillDir, "dedupClusters", "cc")
 
     pairs.select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
       .write.mode("overwrite").parquet(s"$runDir/edges")
@@ -1858,8 +1851,7 @@ object Dedup {
     */
   def corpusCleanFull(docs: DataFrame, spillDir: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
-    val base = spillBase(spark, spillDir, "corpusCleanFull")
-    val tokDir = trackSpill(s"$base/${runDirName("tok")}")
+    val tokDir = spillRun(spark, spillDir, "corpusCleanFull", "tok")
     // spread BEFORE the artifact write: a single-file corpus scan would
     // otherwise run the tokenize+hash job on one task AND land the
     // artifact as one file, so every downstream stage would begin from a
@@ -3114,7 +3106,7 @@ object Dedup {
         .groupBy(col("doc_id"))
         .agg(min(hash60(col("gr"))).as("k1"),
           min(hash60(concat(lit("2|"), col("gr")))).as("k2"))
-      val keyDir = trackSpill(s"${spillBase(s, None, "d20_snm_multipass")}/${runDirName("snm")}")
+      val keyDir = spillRun(s, None, "d20_snm_multipass", "snm")
       keyed.write.mode("overwrite").parquet(keyDir)
       val keyArt = s.read.parquet(keyDir)
       def passPairs(key: String): DataFrame = {

@@ -34,17 +34,25 @@ import graft.OpQuery.sql
   */
 object Multimodal {
 
-  // r21 (guide §1.2 step 2 — per-task work): ImageIO's default
-  // useCache=true backs EVERY ImageIO.read/write(InputStream/
-  // OutputStream) with a FileCache stream — a temp file created and
-  // deleted on local disk PER IMAGE. Every payload in this engine is an
-  // in-memory byte array of a few-KB PNG, so the disk-backed cache is
-  // pure per-row overhead (measured ~ms per codec call, the dominant
-  // cost of the m-family's decode stages). Memory-backed streams decode
-  // and encode BIT-IDENTICAL bytes — the cache only changes where the
-  // stream buffers. JVM-wide, set once at class init (safe: nothing in
-  // this engine decodes images too large for memory buffering).
-  javax.imageio.ImageIO.setUseCache(false)
+  // Every codec call goes through these two helpers: ImageIO's default
+  // useCache=true backs each read/write of a plain stream with a temp
+  // file PER IMAGE, pure overhead for this engine's few-KB in-memory
+  // PNGs. The helpers wrap memory-backed streams explicitly, leaving the
+  // process-wide ImageIO setting alone; the bytes are identical.
+
+  /** Decode an image payload; null when no reader accepts it. */
+  private def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(bytes)))
+
+  /** PNG-encode an image; the stream is flushed and closed before the
+    * bytes are taken. */
+  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, "png", out) finally out.close()
+    bos.toByteArray
+  }
 
   /** The media row contract: an opaque payload plus typed metadata —
     * the Parquet layout a 100 TB multimodal corpus would use (payload
@@ -124,9 +132,7 @@ object Multimodal {
           while (x < w) { r.setSample(x, y, 0, imagePixel(id, x, y)); x += 1 }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        (id, bos.toByteArray)
+        (id, pngBytes(img))
       })
       .toDF("doc_id", "payload")
       .select(col("doc_id"), col("payload"),
@@ -151,7 +157,7 @@ object Multimodal {
     * end to end.
     */
   def decodeImage(id: Long, payload: Array[Byte]): DecodedImage = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    val img = readImage(payload)
     require(img != null, s"doc $id: payload is not a decodable image")
     val w = img.getWidth
     val h = img.getHeight
@@ -410,7 +416,7 @@ object Multimodal {
     * even when the plain total survives.
     */
   def resizeImageStats(id: Long, payload: Array[Byte]): (Long, Long, Long, Long, Long) = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    val img = readImage(payload)
     require(img != null, s"doc $id: payload is not a decodable image")
     val w = img.getWidth
     val h = img.getHeight
@@ -442,10 +448,7 @@ object Multimodal {
       }
       yy += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(out, "png", bos)
-    val rd = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(bos.toByteArray))
+    val rd = readImage(pngBytes(out))
     val rr = rd.getRaster
     var tot = 0L
     var chk = 0L
@@ -495,9 +498,7 @@ object Multimodal {
             while (x < w) { r.setSample(x, y, 0, videoPixel(id, f, x, y)); x += 1 }
             y += 1
           }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          bos.toByteArray
+          pngBytes(img)
         }
         (id, frames)
       })
@@ -516,7 +517,7 @@ object Multimodal {
       .as[(Long, Seq[Array[Byte]])]
       .mapPartitions(_.map { case (id, frames) =>
         val energies = frames.map { p =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
+          val img = readImage(p)
           require(img != null, s"doc $id: frame is not a decodable image")
           val rr = img.getRaster
           var tot = 0L
@@ -574,9 +575,7 @@ object Multimodal {
           }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        (id, bos.toByteArray)
+        (id, pngBytes(img))
       })
       .toDF("doc_id", "payload")
   }
@@ -594,7 +593,7 @@ object Multimodal {
     * not encoder trivia.
     */
   def imageAHash(id: Long, payload: Array[Byte]): (Long, Long) = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    val img = readImage(payload)
     require(img != null, s"doc $id: payload is not a decodable image")
     val w = img.getWidth
     val h = img.getHeight
@@ -654,8 +653,7 @@ object Multimodal {
     // codec pass would run once per consumer. Spill the 24 B/doc
     // signatures once (the t20/t24 artifact pattern; released by
     // Verify/Bench per query) and every consumer reads the artifact.
-    val phDir = graft.llm.Dedup.trackSpill(
-      s"${graft.llm.Dedup.spillBase(s, None, "phashPairs")}/${graft.llm.Dedup.runDirName("ph")}")
+    val phDir = graft.llm.Dedup.spillRun(s, None, "phashPairs", "ph")
     contentImageTable(Tables.spread(docs))
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
@@ -836,8 +834,7 @@ object Multimodal {
           // evenly-spaced sample indices: j·nf/2 (0 and nf÷2) — decode
           // ONLY the sampled frames; the clip's other PNGs stay bytes
           val energies = (0 until k).map { j =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(frames(j * nf / 2)))
+            val img = readImage(frames(j * nf / 2))
             require(img != null, s"doc $id: sampled frame not decodable")
             val rr = img.getRaster
             var tot = 0L
@@ -1084,8 +1081,7 @@ object Multimodal {
       // per-frame DFT); it feeds sizes, the cap counts, and both join
       // sides — spill the compact (doc_id, keys) frame once so the
       // codec pass runs once (the phashPairs artifact discipline)
-      val lmkDir = graft.llm.Dedup.trackSpill(
-        s"${graft.llm.Dedup.spillBase(s, None, "m5_audio")}/${graft.llm.Dedup.runDirName("lmk")}")
+      val lmkDir = graft.llm.Dedup.spillRun(s, None, "m5_audio", "lmk")
       audioTable(Tables.spread(Tables.documents(s, d)))
         .select(col("doc_id"), col("payload"))
         .as[(Long, Array[Byte])]

@@ -155,8 +155,7 @@ object Similarity {
   def ivfRecallSweep(queries: DataFrame, corpus: DataFrame, k: Int = 5,
       nlist: Int = 8): DataFrame = {
     val s = queries.sparkSession
-    val dir = Dedup.trackSpill(
-      s"${Dedup.spillBase(s, None, "ivfRecallSweep")}/${Dedup.runDirName("ivf")}")
+    val dir = Dedup.spillRun(s, None, "ivfRecallSweep", "ivf")
     // r13 (full-oracle promotion): the replayable trainer + rounded
     // routing — the s4/s16 machinery — so DuckDB can replay the whole
     // curve (codebook, assignment, probe ranks, recalls, scan
@@ -528,14 +527,13 @@ object Similarity {
   /** One count job per corpus key (metadata-only on parquet; at 100 TB
     * pass the catalog row count via an explicit nlist instead). A
     * `cacheKey` pins a corpus SNAPSHOT — the registry keys its immutable
-    * per-SF fixtures — so the count memoizes for the JVM; a corpus that
-    * grows must not be keyed.
+    * per-SF fixtures — so the count memoizes until the context stops
+    * ([[graft.EngineState]]); a corpus that grows must not be keyed.
     */
-  private val corpusCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
   private def corpusCount(corpus: DataFrame, cacheKey: Option[String]): Long =
     cacheKey.fold(corpus.count())(k =>
-      corpusCountCache.getOrElseUpdate(k, corpus.count()))
+      graft.EngineState.of(corpus.sparkSession).corpusCounts
+        .getOrElseUpdate(k, corpus.count()))
 
   /** Train an IVF routing codebook: Lloyd's iterations on a BOUNDED
     * deterministic sample (smallest `sampleN` rows by seeded vec_id hash —
@@ -4401,8 +4399,7 @@ object Similarity {
         case Codec.Pq => "ivfpq"
         case Codec.Sq8 => "ivfsq8"
       }
-      val dir = root.getOrElse(Dedup.trackSpill(
-        s"${Dedup.spillBase(spark, None, "IvfIndex.build")}/${Dedup.runDirName(prefix)}"))
+      val dir = root.getOrElse(Dedup.spillRun(spark, None, "IvfIndex.build", prefix))
       val vecStore = codec match {
         case Codec.Flat => Some("assignments")
         case Codec.Pq => Some("vectors")

@@ -1117,8 +1117,7 @@ object TextStats {
       // corpus-wide bigram pipeline (the dominant cost) once per
       // consumer — spill the doc-level scores once (the d20 pattern;
       // same session spill ledger, released by Verify/Bench per query)
-      val lmDir = Dedup.trackSpill(
-        s"${Dedup.spillBase(s, None, "t20_perplexity_buckets")}/${Dedup.runDirName("lm")}")
+      val lmDir = Dedup.spillRun(s, None, "t20_perplexity_buckets", "lm")
       bigramLogprob(s, d).select(col("doc_id"), col("avg_logprob"))
         .write.mode("overwrite").parquet(lmDir)
       val lp = s.read.parquet(lmDir)
@@ -1428,8 +1427,7 @@ object TextStats {
       // tokens once (the t20 artifact pattern — dictionary-encoded
       // parquet, released by Verify/Bench per query) so the second
       // consumer reads the compact artifact, not `documents`.
-      val tokDir = Dedup.trackSpill(
-        s"${Dedup.spillBase(s, None, "t24_grouped_heavy_hitters")}/${Dedup.runDirName("tok")}")
+      val tokDir = Dedup.spillRun(s, None, "t24_grouped_heavy_hitters", "tok")
       Tables.spread(Tables.documents(s, d))
         .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("t"))
         .write.mode("overwrite").parquet(tokDir)

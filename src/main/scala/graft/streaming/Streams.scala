@@ -1589,8 +1589,7 @@ object Streams {
       // hash-matched END-STATE statement lives in st14 on the FULL fixture.
       val e = Similarity.clusteredEmbeddings(Tables.embeddings(s, d))
         .filter(col("vec_id") < 800)
-      val lcRoot = graft.llm.Dedup.trackSpill(
-        s"${graft.llm.Dedup.spillBase(s, None, "st12")}/${graft.llm.Dedup.runDirName("ivflc")}")
+      val lcRoot = graft.llm.Dedup.spillRun(s, None, "st12", "ivflc")
       val base = e.filter(pmod(col("vec_id"), lit(3)) === 0)
       val undrifted = e.filter(pmod(col("vec_id"), lit(3)) === 1)
       val drifted = e.filter(pmod(col("vec_id"), lit(3)) === 2)
@@ -1808,8 +1807,7 @@ object Streams {
       val base = shifted.filter(pmod(col("doc_id"), lit(3)) === 0)
       val b1 = shifted.filter(pmod(col("doc_id"), lit(3)) === 1)
       val b2 = shifted.filter(pmod(col("doc_id"), lit(3)) === 2)
-      val lcRoot = graft.llm.Dedup.trackSpill(
-        s"${graft.llm.Dedup.spillBase(s, None, "st15")}/${graft.llm.Dedup.runDirName("bpelc")}")
+      val lcRoot = graft.llm.Dedup.spillRun(s, None, "st15", "bpelc")
       BpeLifecycle.init(s, lcRoot, base)
       val r1 = BpeLifecycle.tick(s, lcRoot, b1, 0L).get
       val r2 = BpeLifecycle.tick(s, lcRoot, b2, 1L).get
@@ -1896,8 +1894,7 @@ object Streams {
       // codegen'd BPE counter — measured ~2× the whole-entry cost.
       // r20: the tokenizer training (over base) and the quality-gate
       // spill (over stream) share no inputs — overlap them (guide §2.6)
-      val spill = Dedup.trackSpill(
-        s"${Dedup.spillBase(s, None, "st16")}/${Dedup.runDirName("fdoor")}")
+      val spill = Dedup.spillRun(s, None, "st16", "fdoor")
       val (pairs, _) = graft.llm.Similarity.inParallel(
         TextStats.bpeLearnMerges(base).map(m => (m._2, m._3)),
         qualityRoute(stream)
@@ -2005,8 +2002,7 @@ object Streams {
       val docs = Tables.documents(s, d).filter(col("doc_id") < 2400)
       val base = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
       val stream = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val run = Dedup.trackSpill(
-        s"${Dedup.spillBase(s, None, "q82")}/${Dedup.runDirName("forget")}")
+      val run = Dedup.spillRun(s, None, "q82", "forget")
       val stores = FrontDoorStores(s"$run/lc", s"$run/ledger",
         s"$run/v", s"$run/d")
       // r20: lifecycle bootstrap and ledger seed write DISJOINT stores

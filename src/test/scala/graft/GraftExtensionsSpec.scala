@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 
 /** The SparkSessionExtensions integration: injected SQL functions and the
-  * SelfSimilarityFold optimizer rule (applied directly here — the shared
-  * test session predates extension loading).
+  * SelfSimilarityFold optimizer rule, on the shared test session (which
+  * loads the extensions like every GraftSession).
   */
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -16,19 +16,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("graft_bpe_count/tokens SQL functions serve the CURRENT artifact version") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // the shared test session predates extension loading, so register
-    // through the SAME builders the extension injects
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier("graft_bpe_count"),
-      new ExpressionInfo(classOf[graft.functions.BpeCount].getName,
-        "graft_bpe_count"),
-      GraftExtensions.bpeCountBuilder _)
-    reg.registerFunction(FunctionIdentifier("graft_bpe_tokens"),
-      new ExpressionInfo(classOf[graft.functions.BpeTokens].getName,
-        "graft_bpe_tokens"),
-      GraftExtensions.bpeTokensBuilder _)
     val docs = Tables.documents(spark, sf)
     docs.createOrReplaceTempView("ext_docs")
     try {
@@ -72,23 +59,12 @@ class GraftExtensionsSpec extends SparkSpec {
         "a 4-merge table must count differently than the 32-merge one")
     } finally {
       spark.conf.unset(GraftConfig.BpeModelRootKey)
-      reg.dropFunction(FunctionIdentifier("graft_bpe_count"))
-      reg.dropFunction(FunctionIdentifier("graft_bpe_tokens"))
       spark.catalog.dropTempView("ext_docs")
       ()
     }
   }
 
   test("graft_ann_topk serves the persisted index from SQL: API parity, manifest freshness, lifecycle CURRENT") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    // register through the SAME builder the extension injects (shared
-    // test session predates extension loading — the graft_bpe pattern)
-    val reg = spark.sessionState.tableFunctionRegistry
-    reg.registerFunction(FunctionIdentifier("graft_ann_topk"),
-      new ExpressionInfo(classOf[graft.llm.Similarity.type].getName,
-        "graft_ann_topk"),
-      GraftExtensions.annTopKBuilder _)
     try {
       val e = graft.llm.Similarity.clusteredEmbeddings(
         Tables.embeddings(spark, sf))
@@ -160,76 +136,6 @@ class GraftExtensionsSpec extends SparkSpec {
         "post-cutover SQL must serve the retrained generation")
     } finally {
       spark.conf.unset(GraftConfig.IndexRootKey)
-      reg.dropFunction(FunctionIdentifier("graft_ann_topk"))
-      ()
-    }
-  }
-
-  test("graft_ann_topk_batch serves a COLUMN of queries from SQL; the lateral form fails loudly as documented") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val reg = spark.sessionState.tableFunctionRegistry
-    reg.registerFunction(FunctionIdentifier("graft_ann_topk"),
-      new ExpressionInfo(classOf[graft.llm.Similarity.type].getName,
-        "graft_ann_topk"),
-      GraftExtensions.annTopKBuilder _)
-    reg.registerFunction(FunctionIdentifier("graft_ann_topk_batch"),
-      new ExpressionInfo(classOf[graft.llm.Similarity.type].getName,
-        "graft_ann_topk_batch"),
-      GraftExtensions.annTopKBatchBuilder _)
-    try {
-      val e = graft.llm.Similarity.clusteredEmbeddings(
-        Tables.embeddings(spark, sf))
-      val idx = graft.llm.Similarity.IvfIndex.build(e,
-        graft.llm.Similarity.Quantizer.sampled(e)).root
-      spark.conf.set(GraftConfig.IndexRootKey, idx)
-      val queries = e.filter(col("vec_id") < 5L)
-      queries.createOrReplaceTempView("ann_queries")
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-
-      // batch TVF ≡ the DataFrame API's batch serving, row for row
-      val sqlRows = spark
-        .sql("SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_queries', 5)")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val apiRows = graft.llm.Similarity.IvfIndex.open(spark, idx).serve(queries, 5)
-        .select(col("qid"), col("vid"), col("sim"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(sqlRows === apiRows && sqlRows.nonEmpty,
-        "SQL batch serving must equal the DataFrame API")
-      assert(sqlRows.map(_._1) === queries.select(col("vec_id"))
-        .collect().map(_.getLong(0)).toSet,
-        "every query row must be served")
-
-      // the LATERAL-correlated form needs the RESOLUTION RULE (r19):
-      // on a session that registered only the functions — not
-      // GraftExtensions' rules — the correlated call resolves to the
-      // AnnTopKHole placeholder and analysis fails LOUDLY with the
-      // hole's hosting guidance, never a silent wrong answer. (The
-      // hosted path is spec'd below on an extensions session.)
-      val exL = intercept[Exception] {
-        spark.sql("SELECT q.vec_id, t.vid FROM ann_queries q, " +
-          "LATERAL graft_ann_topk(q.embedding, 5) t").collect()
-      }
-      assert(msgs(exL).exists(_.contains("hostable only as")),
-        s"rule-less lateral must fail with the hole guidance: ${msgs(exL)}")
-
-      // misuse of the batch form fails analysis naming the contract
-      val exT = intercept[Exception] {
-        spark.sql("SELECT * FROM graft_ann_topk_batch(42, 5)").collect()
-      }
-      assert(msgs(exT).exists(_.contains("string literal naming")))
-      val exA = intercept[Exception] {
-        spark.sql("SELECT * FROM graft_ann_topk_batch('ann_queries')").collect()
-      }
-      assert(msgs(exA).exists(
-        _.contains("graft_ann_topk_batch(queries, k[, nprobe])")))
-    } finally {
-      spark.conf.unset(GraftConfig.IndexRootKey)
-      spark.catalog.dropTempView("ann_queries")
-      reg.dropFunction(FunctionIdentifier("graft_ann_topk"))
-      reg.dropFunction(FunctionIdentifier("graft_ann_topk_batch"))
-      ()
     }
   }
 
@@ -237,23 +143,13 @@ class GraftExtensionsSpec extends SparkSpec {
     // r19, the r18 verdict's #1. The injected-TVF surface still cannot
     // carry correlation; GraftExtensions' resolution rule rewrites the
     // lateral join into the SAME batch-join plan graft_ann_topk_batch
-    // returns. Needs a session that actually LOADS the extension (the
-    // shared test session predates extension loading): built here over
-    // the same SparkContext via withExtensions, restored in finally.
-    val baseSession = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = GraftSession.builder("graft-lateral", 4)
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions()(_))
-      .getOrCreate()
+    // returns (the shared test session loads the extension).
     try {
       val e = graft.llm.Similarity.clusteredEmbeddings(
-        Tables.embeddings(s2, sf))
+        Tables.embeddings(spark, sf))
       val idx = graft.llm.Similarity.IvfIndex.build(e,
         graft.llm.Similarity.Quantizer.sampled(e)).root
-      s2.conf.set(GraftConfig.IndexRootKey, idx)
+      spark.conf.set(GraftConfig.IndexRootKey, idx)
       // query ids OUTSIDE the corpus id space: the batch TVF's
       // vid == vec_id self-exclusion then never fires — the regime in
       // which the identity-less lateral form is exactly ≡ batch (and
@@ -264,16 +160,16 @@ class GraftExtensionsSpec extends SparkSpec {
         .createOrReplaceTempView("ann_q_lat")
       def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val batch = rows(s2.sql(
+      val batch = rows(spark.sql(
         "SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_q_lat', 5)"))
-      val lat = rows(s2.sql(
+      val lat = rows(spark.sql(
         "SELECT q.vec_id, t.vid, t.sim FROM ann_q_lat q, " +
           "LATERAL graft_ann_topk(q.embedding, 5) t"))
       assert(lat === batch && lat.nonEmpty,
         "lateral must equal the batch TVF row-for-row on the same index")
 
       // alias-less + 3-arg nprobe form + a WHERE on the left side
-      val lat3 = s2.sql(
+      val lat3 = spark.sql(
         "SELECT vec_id, vid FROM ann_q_lat, " +
           "LATERAL graft_ann_topk(embedding, 3, 2) WHERE vec_id % 2 = 0")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -286,9 +182,9 @@ class GraftExtensionsSpec extends SparkSpec {
       // carries only the VECTOR (the point form's qid −1 contract,
       // batched) and must surface the identical corpus vector itself
       e.filter(col("vec_id") < 5L).createOrReplaceTempView("ann_q_self")
-      val bSelf = rows(s2.sql(
+      val bSelf = rows(spark.sql(
         "SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_q_self', 5)"))
-      val lSelf = rows(s2.sql(
+      val lSelf = rows(spark.sql(
         "SELECT q.vec_id, t.vid, t.sim FROM ann_q_self q, " +
           "LATERAL graft_ann_topk(q.embedding, 5) t"))
       assert(bSelf.forall { case (q, vid, _) => vid != q },
@@ -298,10 +194,10 @@ class GraftExtensionsSpec extends SparkSpec {
 
       // duplicate and NULL query vectors: dups each get the (shared)
       // top-k; null vectors produce no rows (inner-join semantics)
-      s2.sql("SELECT * FROM ann_q_lat UNION ALL SELECT * FROM ann_q_lat " +
+      spark.sql("SELECT * FROM ann_q_lat UNION ALL SELECT * FROM ann_q_lat " +
         "UNION ALL SELECT -7L AS vec_id, CAST(NULL AS ARRAY<FLOAT>) AS embedding")
         .createOrReplaceTempView("ann_q_dup")
-      val latDup = s2.sql(
+      val latDup = spark.sql(
         "SELECT q.vec_id, t.vid, t.sim FROM ann_q_dup q, " +
           "LATERAL graft_ann_topk(q.embedding, 5) t")
       assert(latDup.count() === 2L * lat.size,
@@ -309,7 +205,7 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(rows(latDup) === lat, "duplicate rows share the top-k")
 
       // empty left side serves zero rows without failing
-      assert(s2.sql(
+      assert(spark.sql(
         "SELECT q.vec_id, t.vid FROM (SELECT * FROM ann_q_lat WHERE " +
           "vec_id < 0) q, LATERAL graft_ann_topk(q.embedding, 5) t")
         .count() === 0L)
@@ -317,10 +213,10 @@ class GraftExtensionsSpec extends SparkSpec {
       // PQ-shaped root dispatches to the ADC + exact-re-rank path
       val pq = graft.llm.Similarity.IvfIndex.build(e,
         graft.llm.Similarity.Quantizer.sampled(e), codec = graft.llm.Similarity.Codec.Pq).root
-      s2.conf.set(GraftConfig.IndexRootKey, pq)
-      val batchPq = rows(s2.sql(
+      spark.conf.set(GraftConfig.IndexRootKey, pq)
+      val batchPq = rows(spark.sql(
         "SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_q_lat', 5)"))
-      val latPq = rows(s2.sql(
+      val latPq = rows(spark.sql(
         "SELECT q.vec_id, t.vid, t.sim FROM ann_q_lat q, " +
           "LATERAL graft_ann_topk(q.embedding, 5) t"))
       assert(latPq === batchPq && latPq.nonEmpty,
@@ -331,11 +227,11 @@ class GraftExtensionsSpec extends SparkSpec {
       val sq8 = java.nio.file.Files.createTempDirectory("ann-sq8").toString
       graft.llm.Similarity.IvfIndex.build(e, graft.llm.Similarity.Quantizer.replayable(e),
         Some(sq8), graft.llm.Similarity.Codec.Sq8)
-      s2.conf.set(GraftConfig.IndexRootKey, sq8)
-      val batchSq8 = rows(s2.sql(
+      spark.conf.set(GraftConfig.IndexRootKey, sq8)
+      val batchSq8 = rows(spark.sql(
         "SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_q_lat', 5)"))
-      val apiSq8 = rows(graft.llm.Similarity.IvfIndex.openReplayable(s2, sq8)
-        .serve(s2.table("ann_q_lat"), 5))
+      val apiSq8 = rows(graft.llm.Similarity.IvfIndex.openReplayable(spark, sq8)
+        .serve(spark.table("ann_q_lat"), 5))
       assert(batchSq8 === apiSq8 && batchSq8.nonEmpty,
         "SQL serving of an SQ8 root must equal the DataFrame serve")
 
@@ -343,9 +239,9 @@ class GraftExtensionsSpec extends SparkSpec {
       // a drift-triggered retrain cutover is visible to the NEXT query
       val lcRoot = java.nio.file.Files.createTempDirectory("ann-lat-lc").toString
       val lcBase = e.filter(pmod(col("vec_id"), lit(3)) === 0)
-      graft.streaming.IndexLifecycle.init(s2, lcRoot, lcBase)
-      s2.conf.set(GraftConfig.IndexRootKey, lcRoot)
-      val latLc = rows(s2.sql(
+      graft.streaming.IndexLifecycle.init(spark, lcRoot, lcBase)
+      spark.conf.set(GraftConfig.IndexRootKey, lcRoot)
+      val latLc = rows(spark.sql(
         "SELECT q.vec_id, t.vid, t.sim FROM ann_q_lat q, " +
           "LATERAL graft_ann_topk(q.embedding, 5) t"))
       assert(latLc.nonEmpty && latLc.forall(_._2 % 3 === 0),
@@ -353,29 +249,29 @@ class GraftExtensionsSpec extends SparkSpec {
       val drifted = e.filter(pmod(col("vec_id"), lit(3)) === 1)
         .select(col("vec_id"),
           transform(col("embedding"), x => x + lit(0.75f)).as("embedding"))
-      val cut = graft.streaming.IndexLifecycle.tick(s2, lcRoot, drifted, 1L)
+      val cut = graft.streaming.IndexLifecycle.tick(spark, lcRoot, drifted, 1L)
       assert(cut, "the shifted batch must cut over to a new generation")
-      s2.sql("SELECT vec_id, transform(embedding, x -> x + 0.75F) AS embedding " +
+      spark.sql("SELECT vec_id, transform(embedding, x -> x + 0.75F) AS embedding " +
         "FROM ann_q_lat").createOrReplaceTempView("ann_q_drift")
-      val latLc2 = rows(s2.sql(
+      val latLc2 = rows(spark.sql(
         "SELECT q.vec_id, t.vid, t.sim FROM ann_q_drift q, " +
           "LATERAL graft_ann_topk(q.embedding, 5) t"))
       assert(latLc2.exists(_._2 % 3 === 1),
         "post-cutover lateral must serve the retrained generation")
 
       // UNHOSTABLE shapes fail loudly via the check rule, with guidance
-      s2.conf.set(GraftConfig.IndexRootKey, idx)
+      spark.conf.set(GraftConfig.IndexRootKey, idx)
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
       val exOuter = intercept[Exception] {
-        s2.sql("SELECT q.vec_id, t.vid FROM ann_q_lat q LEFT OUTER JOIN " +
+        spark.sql("SELECT q.vec_id, t.vid FROM ann_q_lat q LEFT OUTER JOIN " +
           "LATERAL graft_ann_topk(q.embedding, 5) t").collect()
       }
       assert(msgs(exOuter).exists(_.contains("hostable only as")),
         s"outer lateral must fail with hosting guidance: ${msgs(exOuter)}")
       // correlated k is genuinely unhostable — loud at the builder
       val exK = intercept[Exception] {
-        s2.sql("SELECT q.vec_id, t.vid FROM ann_q_lat q, " +
+        spark.sql("SELECT q.vec_id, t.vid FROM ann_q_lat q, " +
           "LATERAL graft_ann_topk(q.embedding, CAST(q.vec_id AS INT)) t")
           .collect()
       }
@@ -383,34 +279,19 @@ class GraftExtensionsSpec extends SparkSpec {
         s"correlated k must fail loudly: ${msgs(exK)}")
       // a non-array correlated vector fails naming the type contract
       val exT = intercept[Exception] {
-        s2.sql("SELECT q.vec_id, t.vid FROM ann_q_lat q, " +
+        spark.sql("SELECT q.vec_id, t.vid FROM ann_q_lat q, " +
           "LATERAL graft_ann_topk(q.vec_id, 5) t").collect()
       }
       assert(msgs(exT).exists(_.contains("numeric array")),
         s"non-array vector must fail naming the contract: ${msgs(exT)}")
     } finally {
-      s2.conf.unset(GraftConfig.IndexRootKey)
+      spark.conf.unset(GraftConfig.IndexRootKey)
       Seq("ann_q_lat", "ann_q_self", "ann_q_dup", "ann_q_drift")
-        .foreach(v => { s2.catalog.dropTempView(v); () })
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      org.apache.spark.sql.SparkSession.setDefaultSession(baseSession)
-      org.apache.spark.sql.SparkSession.setActiveSession(baseSession)
+        .foreach(v => { spark.catalog.dropTempView(v); () })
     }
   }
 
   test("graft_quality_route / graft_budget_route: SQL ≡ the st8/st13 DataFrame routes row-for-row; arity/knob fail-loud") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier("graft_quality_route"),
-      new ExpressionInfo(classOf[graft.streaming.Streams.type].getName,
-        "graft_quality_route"),
-      GraftExtensions.qualityRouteBuilder _)
-    reg.registerFunction(FunctionIdentifier("graft_budget_route"),
-      new ExpressionInfo(classOf[graft.streaming.Streams.type].getName,
-        "graft_budget_route"),
-      GraftExtensions.budgetRouteBuilder _)
     val docs = Tables.documents(spark, sf)
     docs.createOrReplaceTempView("gate_docs")
     def msgs(t: Throwable): Seq[String] =
@@ -476,8 +357,6 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(msgs(exQ).exists(_.contains("graft_quality_route(text)")))
     } finally {
       spark.conf.unset(GraftConfig.BpeModelRootKey)
-      reg.dropFunction(FunctionIdentifier("graft_quality_route"))
-      reg.dropFunction(FunctionIdentifier("graft_budget_route"))
       spark.catalog.dropTempView("gate_docs")
       ()
     }
@@ -590,5 +469,76 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(out(1).getDouble(1).isNaN)
     assert(out(2).isNullAt(1))
     assert(out(3).getDouble(1).isNaN) // matches the unfolded NaN/NaN path
+  }
+
+  test("graft_ann_topk_batch serves a COLUMN of queries from SQL; the lateral form fails loudly as documented") {
+    // the last test of the suite: its rule-less session below needs the
+    // shared context stopped (TestSpark rebuilds it for the next suite)
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    val e = graft.llm.Similarity.clusteredEmbeddings(
+      Tables.embeddings(spark, sf))
+    val idx = graft.llm.Similarity.IvfIndex.build(e,
+      graft.llm.Similarity.Quantizer.sampled(e)).root
+    try {
+      spark.conf.set(GraftConfig.IndexRootKey, idx)
+      val queries = e.filter(col("vec_id") < 5L)
+      queries.createOrReplaceTempView("ann_queries")
+
+      // batch TVF ≡ the DataFrame API's batch serving, row for row
+      val sqlRows = spark
+        .sql("SELECT qid, vid, sim FROM graft_ann_topk_batch('ann_queries', 5)")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val apiRows = graft.llm.Similarity.IvfIndex.open(spark, idx).serve(queries, 5)
+        .select(col("qid"), col("vid"), col("sim"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(sqlRows === apiRows && sqlRows.nonEmpty,
+        "SQL batch serving must equal the DataFrame API")
+      assert(sqlRows.map(_._1) === queries.select(col("vec_id"))
+        .collect().map(_.getLong(0)).toSet,
+        "every query row must be served")
+
+      // misuse of the batch form fails analysis naming the contract
+      val exT = intercept[Exception] {
+        spark.sql("SELECT * FROM graft_ann_topk_batch(42, 5)").collect()
+      }
+      assert(msgs(exT).exists(_.contains("string literal naming")))
+      val exA = intercept[Exception] {
+        spark.sql("SELECT * FROM graft_ann_topk_batch('ann_queries')").collect()
+      }
+      assert(msgs(exA).exists(
+        _.contains("graft_ann_topk_batch(queries, k[, nprobe])")))
+    } finally {
+      spark.conf.unset(GraftConfig.IndexRootKey)
+      spark.catalog.dropTempView("ann_queries")
+      ()
+    }
+
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    spark.stop()
+    val bare = GraftSession.local(4, Seq("spark.sql.extensions" -> ""))
+    try {
+      bare.sessionState.tableFunctionRegistry.registerFunction(
+        FunctionIdentifier("graft_ann_topk"),
+        new ExpressionInfo(classOf[graft.llm.Similarity.type].getName,
+          "graft_ann_topk"),
+        GraftExtensions.annTopKBuilder _)
+      graft.llm.Similarity.clusteredEmbeddings(Tables.embeddings(bare, sf))
+        .filter(col("vec_id") < 5L).createOrReplaceTempView("ann_queries")
+
+      // the LATERAL-correlated form needs the RESOLUTION RULE (r19):
+      // on a session that registered only the functions — not
+      // GraftExtensions' rules — the correlated call resolves to the
+      // AnnTopKHole placeholder and analysis fails LOUDLY with the
+      // hole's hosting guidance, never a silent wrong answer. (The
+      // hosted path is spec'd above on the shared session.)
+      val exL = intercept[Exception] {
+        bare.sql("SELECT q.vec_id, t.vid FROM ann_queries q, " +
+          "LATERAL graft_ann_topk(q.embedding, 5) t").collect()
+      }
+      assert(msgs(exL).exists(_.contains("hostable only as")),
+        s"rule-less lateral must fail with the hole guidance: ${msgs(exL)}")
+    } finally bare.stop()
   }
 }

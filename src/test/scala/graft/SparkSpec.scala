@@ -4,27 +4,23 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; suites are
-  * sequential under sbt's forked test JVM).
+  * sequential under sbt's forked test JVM), rebuilt when a suite has
+  * stopped its context.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+  private var session: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (session == null || session.sparkContext.isStopped)
       // checkpoint-file checksums guard against corruption on real
       // cluster filesystems; over local /tmp they only multiply file ops,
       // and each extra rename forks a `readlink` subprocess through
       // Hadoop's RawLocalFileSystem — observed to stall a stateful-
       // timeout commit for 15+ minutes in this JVM. Tests don't need
       // corruption detection; production sessions keep the default.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      session = GraftSession.local(4,
+        Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"))
+    session
   }
 }
 
