@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -30,6 +31,19 @@ final class EngineState private (hadoopConf: Configuration) {
 
   /** Spill run dirs whose returned plans may still be live. */
   private[graft] val spills = new ConcurrentLinkedQueue[String]()
+
+  /** Propagation rounds the last [[graft.llm.Dedup.dedupClusters]] took
+    * to converge: single digits at any SF, as pointer jumping needs
+    * O(log diameter); DedupSpec pins the bound. */
+  private[graft] val lastClosureRounds = new AtomicInteger(-1)
+
+  /** Which closure path the last [[graft.llm.Dedup.mergeClosureLabels]]
+    * fold took ("unionfind" | "distributed" | "" before any fold). */
+  private[graft] val lastMergePath = new AtomicReference[String]("")
+
+  /** Size of the last [[graft.operators.Relational.groupedRunningSum]]
+    * pass-1 collect; PartitioningSpec bounds it. */
+  private[graft] val lastPartialCount = new AtomicInteger(-1)
 
   /** Delete every tracked spill dir; see [[graft.llm.Dedup.releaseSpills]].
     * Never throws; returns the number of directories removed. */

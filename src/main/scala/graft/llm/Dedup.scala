@@ -555,14 +555,6 @@ object Dedup {
     */
   val MergeUnionFindMax: Int = 2000000
 
-  /** Which closure path the last [[mergeClosureLabels]] fold took
-    * ("unionfind" | "distributed" | "" before any fold) — a test probe
-    * like Relational.lastPartialCount: single-JVM visibility, local
-    * specs only, not a runtime contract.
-    */
-  private[graft] val lastMergePath =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-
   def readClosureLabels(spark: SparkSession, labelsDir: String): DataFrame = {
     graft.core.DirSwap.recover(spark, labelsDir)
     val p = new org.apache.hadoop.fs.Path(labelsDir)
@@ -635,7 +627,7 @@ object Dedup {
     if (edgeRows.nonEmpty) {
       val comp: DataFrame =
         if (edgeRows.length <= ufMax) {
-          lastMergePath.set("unionfind")
+          graft.EngineState.of(spark).lastMergePath.set("unionfind")
           val parent = scala.collection.mutable.Map.empty[Long, Long]
           def find(x: Long): Long = {
             var r = x
@@ -656,7 +648,7 @@ object Dedup {
           val nodes = edgeRows.flatMap { case (a, b) => Seq(a, b) }.distinct
           nodes.map(n => (n, find(n))).toSeq.toDF("__node", "__nc")
         } else {
-          lastMergePath.set("distributed")
+          graft.EngineState.of(spark).lastMergePath.set("distributed")
           dedupClusters(repEdges)
             .select(col("doc_id").as("__node"), col("comp_id").as("__nc"))
         }
@@ -1603,17 +1595,6 @@ object Dedup {
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Propagation rounds the most recent [[dedupClusters]] invocation
-    * took to converge — the closure-iteration observability VERDICT r8
-    * asked for. Pointer jumping converges in O(log diameter) and the
-    * bucket caps keep components shallow, so this should sit in single
-    * digits at any SF; a value trending toward `maxRounds` flags a
-    * degenerate pair graph (cap misconfiguration) long before the loud
-    * non-convergence refusal fires. Logged per invocation; DedupSpec
-    * pins the practical bound.
-    */
-  @volatile var lastClosureRounds: Int = -1
-
   def dedupClusters(pairs: DataFrame, maxRounds: Int = 50,
       spillDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
@@ -1664,7 +1645,7 @@ object Dedup {
     // final — refuse rather than silently under-cluster
     require(converged,
       s"dedupClusters did not converge within $maxRounds rounds (graph diameter too large)")
-    lastClosureRounds = rounds
+    graft.EngineState.of(spark).lastClosureRounds.set(rounds)
     System.err.println(s"[dedupClusters] converged in $rounds propagation rounds")
     // only the FINAL labels spill feeds the returned plan — drop the edge
     // spill and superseded round slots. The final slot itself must outlive

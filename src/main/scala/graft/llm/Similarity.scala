@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType,
@@ -4683,6 +4684,72 @@ object Similarity {
     */
   val DriftBuckets = 4
 
+  /** One side of a drift comparison as counts: `rows` input rows and, per
+    * embedding dimension `d`, `cells(d·W)` elements and `cells(d·W + 1 + k)`
+    * of them in [[embeddingDrift]]'s value bucket `k` (W = 1 +
+    * [[DriftBuckets]]; a null element falls in bucket 0, where the
+    * Column form's `greatest` skipping the null puts it). Integer sums,
+    * so a histogram is the same at any partitioning.
+    */
+  final case class DriftHistogram(rows: Long, cells: IndexedSeq[Long]) {
+    import DriftHistogram.Width
+    def dims: Int = cells.length / Width
+    def elements(d: Int): Long = if (d < dims) cells(d * Width) else 0L
+    def bucket(d: Int, k: Int): Long = if (d < dims) cells(d * Width + 1 + k) else 0L
+  }
+
+  object DriftHistogram {
+    val Width: Int = 1 + DriftBuckets
+
+    /** [[embeddingDrift]]'s bucket of one element: `floor` taken to a
+      * long (NaN → 0, ±Inf → ±Long.MaxValue), then clamped to [0, 3]. */
+    private def bucketOf(x: Double): Int = {
+      val f = math.floor((x + 1.0) / 0.5).toLong
+      if (f <= 0L) 0 else if (f >= DriftBuckets - 1) DriftBuckets - 1 else f.toInt
+    }
+
+    /** Count one partition of (side, array<double>) rows: per side, the
+      * row count followed by the cells, grown to the longest embedding. */
+    private def count(it: Iterator[InternalRow], sides: Int): Array[Array[Long]] = {
+      val acc = Array.fill(sides)(new Array[Long](1))
+      it.foreach { r =>
+        val s = r.getInt(0)
+        acc(s)(0) += 1
+        if (!r.isNullAt(1)) {
+          val a = r.getArray(1)
+          val n = a.numElements()
+          if (acc(s).length < 1 + n * Width) acc(s) = java.util.Arrays.copyOf(acc(s), 1 + n * Width)
+          val c = acc(s)
+          var i = 0
+          while (i < n) {
+            c(1 + i * Width) += 1
+            c(2 + i * Width + (if (a.isNullAt(i)) 0 else bucketOf(a.getDouble(i)))) += 1
+            i += 1
+          }
+        }
+      }
+      acc
+    }
+
+    private def sum(x: Array[Long], y: Array[Long]): Array[Long] =
+      Array.tabulate(math.max(x.length, y.length))(i => x.lift(i).getOrElse(0L) + y.lift(i).getOrElse(0L))
+
+    /** The histogram of each frame's `embedding` column, all in one job
+      * with no exchange: every partition counts into arrays on the
+      * executor, and the driver sums one set of arrays per partition. */
+    def of(frames: Seq[DataFrame]): Seq[DriftHistogram] = {
+      val sides = frames.size
+      val tagged = frames.zipWithIndex.map { case (df, i) =>
+        df.select(lit(i).as("side"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
+      }.reduce(_ union _)
+      tagged.queryExecution.toRdd
+        .mapPartitions(it => Iterator(count(it, sides)))
+        .fold(Array.fill(sides)(new Array[Long](1)))((a, b) => a.zip(b).map { case (x, y) => sum(x, y) })
+        .map(c => DriftHistogram(c(0), scala.collection.immutable.ArraySeq.unsafeWrapArray(c.tail)))
+        .toSeq
+    }
+  }
+
   /** The retrain DECISION's drift statistic: max per-dimension PSI of
     * `newBatch` against `oldCorpus`, bias-corrected. PSI's
     * null-hypothesis expectation is ≈ (B−1)·(1/nb + 1/nd) (first-order
@@ -4690,31 +4757,43 @@ object Similarity {
     * tiny batch dwarfs the 0.2 threshold and would false-trigger a
     * rebuild on every small append. The decision uses the corrected
     * value; [[embeddingDrift]]'s s19 artifact stays raw (its oracle
-    * pins the textbook formula). Shared by [[ivfAppendOrRetrain]] and
-    * the st12 streaming lifecycle
-    * ([[graft.streaming.IndexLifecycle]]). Both inputs need
-    * (vec_id, embedding).
+    * pins the textbook formula). Both inputs need (vec_id, embedding);
+    * both histograms are counted in one job.
     */
   def correctedMaxPsi(oldCorpus: DataFrame, newBatch: DataFrame): Double = {
-    val combined = oldCorpus.select(col("vec_id"), col("embedding"))
-      .withColumn("__base", lit(true))
-      .unionByName(newBatch.select(col("vec_id"), col("embedding"))
-        .withColumn("__base", lit(false)))
-    // r20: the two side counts ride the PSI aggregate's own action as a
-    // crossJoined 1-row aggregate — this decision used to pay THREE
-    // driver-synchronous jobs (two counts + the max-PSI head) per drift
-    // check, and the lifecycle paths (s20, st12's per-tick monitor) pay
-    // it on every batch. Same counts, same correction arithmetic.
-    val r = embeddingDrift(combined, col("__base"))
-      .agg(max(col("psi")).as("mp"))
-      .crossJoin(combined.agg(
-        count(when(col("__base"), 1)).as("nb"),
-        count(when(!col("__base"), 1)).as("nd")))
-      .head()
-    val (maxPsi, nb, nd) = (r.getDouble(0), r.getLong(1), r.getLong(2))
-    val correction = (DriftBuckets - 1) * (1.0 / math.max(nb, 1L) +
-      1.0 / math.max(nd, 1L))
-    maxPsi - correction
+    val Seq(ref, batch) = DriftHistogram.of(Seq(oldCorpus, newBatch))
+    correctedMaxPsi(ref, batch)
+  }
+
+  /** [[correctedMaxPsi]] over two histograms, on the driver, with
+    * [[embeddingDrift]]'s arithmetic term for term: per dimension the
+    * Laplace-smoothed terms over per-dimension ELEMENT counts, a bucket
+    * empty on both sides adding no term, the four terms summed left to
+    * right and rounded to 6 dp (HALF_UP, as `round`); then the max over
+    * dimensions less the χ² correction over ROW counts. Shared by
+    * [[ivfAppendOrRetrain]] and the st12 streaming lifecycle
+    * ([[graft.streaming.IndexLifecycle]]), whose reference side is a
+    * histogram stored once per generation, so a tick counts its batch
+    * only.
+    */
+  def correctedMaxPsi(ref: DriftHistogram, batch: DriftHistogram): Double = {
+    val dims = math.max(ref.dims, batch.dims)
+    if (dims == 0) throw new IllegalArgumentException(
+      s"drift check over empty inputs: neither the reference (${ref.rows} rows) nor " +
+        s"the batch (${batch.rows} rows) holds an embedding element")
+    val maxPsi = (0 until dims).map { d =>
+      val (nb, nd) = (ref.elements(d), batch.elements(d))
+      val psi = (0 until DriftBuckets).map { k =>
+        val (cb, cd) = (ref.bucket(d, k), batch.bucket(d, k))
+        if (cb + cd > 0) {
+          val p = (cb + 1.0) / (nb + 4.0)
+          val q = (cd + 1.0) / (nd + 4.0)
+          (p - q) * StrictMath.log(p / q)
+        } else 0.0
+      }.reduce(_ + _)
+      java.math.BigDecimal.valueOf(psi).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    }.reduce((a: Double, b: Double) => math.max(a, b))
+    maxPsi - (DriftBuckets - 1) * (1.0 / math.max(ref.rows, 1L) + 1.0 / math.max(batch.rows, 1L))
   }
 
   /** The closed index lifecycle (round-9 verdict "Next #2" — s19's
@@ -4737,9 +4816,9 @@ object Similarity {
     * that: post-forced-append max cell occupancy vs the retrained
     * index's, plus recall recovery on the drifted queries.
     *
-    * Drift check cost: ONE scan of old assignments ∪ batch feeding the
-    * (dim)/(dim, bucket)-keyed [[embeddingDrift] aggregation — 64·4
-    * rows of state; the decision itself collects one scalar.
+    * Drift check cost: ONE job with no exchange over old assignments ∪
+    * batch, counting both sides' [[DriftHistogram]]s (64·5 longs per
+    * side); the PSI itself is driver arithmetic.
     */
   def ivfAppendOrRetrain(spark: SparkSession, indexRoot: String,
       newVecs: DataFrame, batchId: Long,

@@ -558,13 +558,6 @@ object Relational {
     * decimal (accumulated as exact BigDecimal, emitted as
     * DECIMAL(38, s) — float running sums would be fold-order-dependent).
     */
-  /** Size of the last pass-1 collect (test probe: PartitioningSpec
-    * asserts it stays ≤ 2 · numShufflePartitions on a grouped rank
-    * whose group count far exceeds the partition count). Single-JVM
-    * visibility only — local tests, not a runtime contract.
-    */
-  private[graft] val lastPartialCount = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   def groupedRunningSum(df: org.apache.spark.sql.DataFrame, group: Seq[String],
       sort: Seq[Column], value: Column, as: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.Row
@@ -627,7 +620,7 @@ object Relational {
           else if (firstKey == null) Iterator((pid, cur, acc)) // one run
           else Iterator((pid, firstKey, firstAcc), (pid, cur, acc))
         }.collect()
-        lastPartialCount.set(partials.length)
+        graft.EngineState.of(spark).lastPartialCount.set(partials.length)
         val offsets: Map[(Int, List[Any]), Long] =
           partials.groupBy(_._2).iterator.flatMap { case (k, arr) =>
             var acc = 0L
@@ -667,7 +660,7 @@ object Relational {
           else if (firstKey == null) Iterator((pid, cur, acc))
           else Iterator((pid, firstKey, firstAcc), (pid, cur, acc))
         }.collect()
-        lastPartialCount.set(partials.length)
+        graft.EngineState.of(spark).lastPartialCount.set(partials.length)
         val offsets: Map[(Int, List[Any]), java.math.BigDecimal] =
           partials.groupBy(_._2).iterator.flatMap { case (k, arr) =>
             var acc = zero

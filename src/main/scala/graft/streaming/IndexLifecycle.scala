@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.llm.Similarity
 import graft.llm.Similarity.{IvfIndex, Quantizer}
@@ -71,13 +70,14 @@ import graft.llm.Similarity.{IvfIndex, Quantizer}
   * newer uncommitted dir is an in-flight retrain).
   *
   * The per-tick drift check is BATCH-proportional, not corpus-
-  * proportional: each generation persists a hash-sampled drift
-  * REFERENCE (`driftref`, ≤ [[DriftRefTargetRows]] rows — the
-  * distribution the generation's codebook was trained on) at build
-  * time, and [[tick]] compares the incoming batch against that bounded
-  * sample instead of rescanning base ∪ deltas. Estimator honesty: under
-  * no drift, PSI of an m-row sample against an n-row batch has
-  * first-order expectation (B−1)·(1/m + 1/n) — exactly the χ² bias
+  * proportional: each build stores the generation's drift REFERENCE as
+  * one small `drifthist` file — the [[Similarity.DriftHistogram]] of a
+  * hash sample of ≤ ~[[DriftRefTargetRows]] of the vectors the
+  * codebook was trained on — and [[tick]] reads it (one open, no job),
+  * counts the incoming batch's histogram in one job with no exchange,
+  * and takes the PSI on the driver. Estimator honesty: under no drift,
+  * PSI of an m-row sample against an n-row batch has first-order
+  * expectation (B−1)·(1/m + 1/n) — exactly the χ² bias
   * [[Similarity.correctedMaxPsi]] subtracts (it uses its inputs' OWN
   * row counts, so the correction stays consistent with the sample);
   * residual noise is O(√(B−1)·(1/m + 1/n)), ≪ the 0.2 threshold at the
@@ -88,10 +88,9 @@ object IndexLifecycle {
 
   private val CommitMarker = "_GRAFT_COMMITTED"
 
-  /** Target row count of a generation's persisted drift-reference
-    * sample — large enough that PSI sampling noise is far below the
-    * 0.2 retrain threshold, small enough that a tick's drift scan is
-    * O(1) in the corpus.
+  /** Target row count of the sample a generation's drift reference is
+    * counted over — large enough that PSI sampling noise is far below
+    * the 0.2 retrain threshold.
     */
   val DriftRefTargetRows: Long = 8192L
 
@@ -153,36 +152,57 @@ object IndexLifecycle {
         s"to CURRENT failed; $name is marked committed and the next reader recovers it")
   }
 
-  /** The schema [[writeDriftRef]] stores `driftref/` with. */
-  val DriftRefSchema: StructType = StructType(Seq(StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType))))
+  /** The file holding a generation's drift reference histogram. */
+  private val DriftRefFile = "drifthist"
 
-  /** Persist a generation's drift reference: a deterministic hash
-    * sample of the vectors the generation's codebook was trained on
-    * (expected ≤ ~[[DriftRefTargetRows]] rows; the WHOLE corpus when it
-    * is smaller than the target, so small-scale decisions are
-    * bit-identical to a full scan). One extra bounded write amortized
-    * into the build — the build scans every vector anyway.
+  /** The deterministic hash sample of `vecs` (`nRows` rows) a
+    * generation's drift reference is counted over: expected ≤
+    * ~[[DriftRefTargetRows]] rows, the WHOLE corpus when it is smaller
+    * than the target, so small-scale decisions are bit-identical to a
+    * full scan.
     */
-  private def writeDriftRef(spark: SparkSession, genRoot: String,
-      vecs: DataFrame, nRows: Long): Unit = {
+  private[graft] def driftSample(vecs: DataFrame, nRows: Long): DataFrame = {
     val mod = math.max(1L, nRows / DriftRefTargetRows)
     vecs.select(col("vec_id"), col("embedding"))
       .filter(pmod(xxhash64(col("vec_id"), lit(42L)), lit(mod)) === 0)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$genRoot/driftref")
   }
 
-  /** The frame a tick's drift decision scans: the generation's persisted
-    * `driftref` sample when present, else (a pre-r11 generation) the
-    * full base∪deltas read — the compat fallback that pays the corpus
-    * scan the reference sample exists to avoid.
+  /** Persist a generation's drift reference: the histogram of its
+    * [[driftSample]], one job and one small file amortized into the
+    * build, which scans every vector anyway. The first line is the row
+    * count; each further line is one dimension's element count and its
+    * bucket counts.
     */
-  private[streaming] def driftBase(spark: SparkSession, genRoot: String): DataFrame = {
-    val p = new Path(s"$genRoot/driftref")
-    if (fsOf(spark, genRoot).exists(p)) spark.read.schema(DriftRefSchema).parquet(p.toString)
-    else IvfIndex.open(spark, genRoot).vectors
-      .select(col("vid").as("vec_id"), col("ve").as("embedding"))
+  private def writeDriftRef(spark: SparkSession, genRoot: String,
+      vecs: DataFrame, nRows: Long): Unit = {
+    val h = Similarity.DriftHistogram.of(Seq(driftSample(vecs, nRows))).head
+    val lines = h.rows.toString +: h.cells.grouped(Similarity.DriftHistogram.Width)
+      .map(_.mkString(" ")).toSeq
+    val out = fsOf(spark, genRoot).create(new Path(genRoot, DriftRefFile), true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A generation's drift reference histogram: one open, no job. A
+    * generation without a readable one fails naming it.
+    */
+  private[graft] def driftReference(spark: SparkSession, genRoot: String): Similarity.DriftHistogram = {
+    val p = new Path(genRoot, DriftRefFile)
+    def unusable(why: String, cause: Throwable = null) = new IllegalStateException(
+      s"index generation $genRoot has no usable drift reference ($p $why); " +
+        "rebuild the lifecycle with IndexLifecycle.init", cause)
+    val lines =
+      try {
+        val in = fsOf(spark, genRoot).open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector finally in.close()
+      } catch { case e: java.io.FileNotFoundException => throw unusable("is missing", e) }
+    val fields =
+      try lines.map(_.split(' ').map(_.toLong))
+      catch { case e: NumberFormatException => throw unusable("is malformed", e) }
+    if (fields.isEmpty || fields.head.length != 1 ||
+        fields.tail.exists(_.length != Similarity.DriftHistogram.Width))
+      throw unusable("is malformed")
+    Similarity.DriftHistogram(fields.head.head,
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(fields.tail.flatten.toArray))
   }
 
   /** Build the initial generation from a base corpus and commit it.
@@ -271,13 +291,13 @@ object IndexLifecycle {
     if (applied.contains(batchId)) false
     else {
       val batch = batchVecs.select(col("vec_id"), col("embedding"))
-      // drift decision against the generation's BOUNDED reference
-      // sample — an in-distribution tick costs O(batch + sample), never
+      // drift decision against the generation's stored reference
+      // histogram — an in-distribution tick counts its batch only, never
       // a base∪deltas scan (which at 100 TB streaming cadence was the
       // first thing to melt: two counts plus a full posexplode pass of
       // the whole historical corpus per micro-batch)
-      if (Similarity.correctedMaxPsi(driftBase(spark, g), batch)
-          >= psiThreshold) {
+      if (Similarity.correctedMaxPsi(driftReference(spark, g),
+          Similarity.DriftHistogram.of(Seq(batch)).head) >= psiThreshold) {
         val old = IvfIndex.open(spark, g).vectors
           .select(col("vid").as("vec_id"), col("ve").as("embedding"))
         val name = s"gen-b$batchId"

@@ -410,7 +410,7 @@ class PartitioningSpec extends SparkSpec {
       (col("id") % 7 + 1).as("v"))
     val got = graft.operators.Relational
       .groupedRunningSum(df, Seq("g"), Seq(col("k")), col("v"), "cum")
-    val n = graft.operators.Relational.lastPartialCount.get
+    val n = graft.EngineState.of(spark).lastPartialCount.get
     assert(n >= 0 && n <= 2 * numParts,
       s"pass-1 collected $n partials for 20k groups (bound: ${2 * numParts})")
     // and the bound costs no correctness: exact window equality

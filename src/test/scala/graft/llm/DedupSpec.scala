@@ -107,14 +107,15 @@ class DedupSpec extends SparkSpec {
       .withColumn("jaccard", lit(1.0))
     val out = Dedup.dedupClusters(chain).collect()
     assert(out.forall(_.getLong(1) == 1L), "chain must collapse to min label")
-    val rounds = Dedup.lastClosureRounds
+    val state = graft.EngineState.of(spark)
+    val rounds = state.lastClosureRounds.get
     assert(rounds >= 1 && rounds <= 12,
       s"diameter-15 chain took $rounds rounds; pointer jumping should need ~2·log2(15)")
     // and the real d8 pair graph (bucket-capped LSH pairs) converges in
     // single-digit rounds at this SF
     Dedup.dedupClusters(Dedup.minhashPairs(graft.Tables.documents(spark, sf))).collect()
-    assert(Dedup.lastClosureRounds >= 1 && Dedup.lastClosureRounds <= 12,
-      s"d8 closure took ${Dedup.lastClosureRounds} rounds at test SF")
+    assert(state.lastClosureRounds.get >= 1 && state.lastClosureRounds.get <= 12,
+      s"d8 closure took ${state.lastClosureRounds.get} rounds at test SF")
   }
 
   test("property: dedupClusters equals driver union-find on random graphs") {

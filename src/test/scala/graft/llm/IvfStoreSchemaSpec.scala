@@ -42,11 +42,35 @@ class IvfStoreSchemaSpec extends SparkSpec {
       s"${pq.root}/pqcodebook" -> IvfIndex.CodebookSchema,
       s"$sq8/centroids" -> Quantizer.CentroidSchema,
       s"$sq8/sq8" -> IvfIndex.Sq8Schema,
-      s"$gen/codes" -> IvfIndex.CodeSchema,
-      s"$gen/driftref" -> IndexLifecycle.DriftRefSchema)
+      s"$gen/codes" -> IvfIndex.CodeSchema)
     stores.foreach { case (dir, schema) =>
       assert(inferred(dir) === schema, s"$dir")
     }
+    // the drift reference is a histogram file, not a Parquet store: what
+    // the reader parses is what the build counted over its sample
+    assert(IndexLifecycle.driftReference(spark, gen) ===
+      Similarity.DriftHistogram.of(Seq(IndexLifecycle.driftSample(base, base.count()))).head,
+      s"$gen/drifthist")
+  }
+
+  test("a committed generation without a drift reference fails the tick, naming it") {
+    val emb = Similarity.clusteredEmbeddings(Tables.embeddings(spark, sf))
+    val lcRoot = Files.createTempDirectory("schema-nohist").toString + "/lc"
+    IndexLifecycle.init(spark, lcRoot, emb.filter(col("vec_id") % 5 =!= 1))
+    val gen = IndexLifecycle.currentRoot(spark, lcRoot).get
+    val hist = new org.apache.hadoop.fs.Path(gen, "drifthist")
+    val fs = hist.getFileSystem(spark.sessionState.newHadoopConf())
+    def tick() = intercept[IllegalStateException](
+      IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 1), 1L))
+    val out = fs.create(hist, true)
+    try out.write("12\n1 2 3\n".getBytes("UTF-8")) finally out.close()
+    val malformed = tick()
+    assert(malformed.getMessage.contains(gen) && malformed.getMessage.contains("malformed"),
+      malformed.getMessage)
+    fs.delete(hist, false)
+    val missing = tick()
+    assert(missing.getMessage.contains(gen) && missing.getMessage.contains("missing"),
+      missing.getMessage)
   }
 
   test("a centroid store of another schema fails the driver read, naming the store") {

@@ -211,7 +211,7 @@ class IndexServeSpec extends SparkSpec {
     }
   }
 
-  test("a warm non-cutover tick runs at most 9 jobs") {
+  test("a warm non-cutover tick runs at most 5 jobs") {
     val lcRoot = lifecycle("idx-tick")
     assert(!IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 1), 1L))
     spark.sparkContext.addSparkListener(listener)
@@ -219,9 +219,9 @@ class IndexServeSpec extends SparkSpec {
       try jobsOf(IndexLifecycle.tick(spark, lcRoot, emb.filter(col("vec_id") % 5 === 2), 2L))
       finally spark.sparkContext.removeSparkListener(listener)
     assert(!cutover)
-    // the drift check's PSI head, the two stores' shuffle + write, and
-    // no centroid or codebook read
-    assert(n <= 9, s"a warm append tick ran $n jobs")
+    // the drift check's one batch-histogram job, the two stores' shuffle
+    // + write, and no centroid, codebook or drift-reference read
+    assert(n <= 5, s"a warm append tick ran $n jobs")
   }
 
   test("a warm serve after one more append compiles nothing") {

@@ -587,21 +587,27 @@ class StreamsSpec extends SparkSpec {
     val lcRoot = tmpDir("st12-ref") + "/lc"
     IndexLifecycle.init(spark, lcRoot, e)
     val g = IndexLifecycle.currentRoot(spark, lcRoot).get
-    val drift = IndexLifecycle.driftBase(spark, g)
-    // plan-level: every file the drift decision can read lives under the
-    // generation's driftref dir — no base/delta assignment file is an
-    // input, so an in-distribution tick never rescans the corpus
-    val files = drift.inputFiles
-    assert(files.nonEmpty && files.forall(_.contains("/driftref")),
-      s"drift decision must read only driftref, got ${files.mkString(",")}")
+    // the decision's reference side is the generation's histogram file:
+    // with every vector store of the generation moved away it still
+    // reads, so an in-distribution tick never rescans the corpus
+    val fs = new org.apache.hadoop.fs.Path(g).getFileSystem(spark.sessionState.newHadoopConf())
+    val aside = new org.apache.hadoop.fs.Path(tmpDir("st12-aside"))
+    val stores = Seq("assignments", "vectors", "deltas", "codes", "codes_deltas")
+      .map(n => new org.apache.hadoop.fs.Path(g, n)).filter(fs.exists)
+    assert(stores.nonEmpty)
+    stores.foreach(p => assert(fs.rename(p, new org.apache.hadoop.fs.Path(aside, p.getName))))
+    val ref =
+      try IndexLifecycle.driftReference(spark, g)
+      finally stores.foreach(p =>
+        assert(fs.rename(new org.apache.hadoop.fs.Path(aside, p.getName), p)))
     // bounded: the sample is capped near the target regardless of corpus
     // size (hash-mod sampling overshoots by at most ~2x at the cut)
-    assert(drift.count() <= IndexLifecycle.DriftRefTargetRows * 2)
+    assert(ref.rows <= IndexLifecycle.DriftRefTargetRows * 2)
     // decision-equivalence at small scale: corpus below the target means
-    // the sample IS the corpus, so the sampled decision is bit-identical
-    // to the full-scan one there
+    // the sample IS the corpus, so the reference is the corpus histogram
+    // and the decision is bit-identical to the full-scan one there
     if (e.count() <= IndexLifecycle.DriftRefTargetRows)
-      assert(drift.count() === e.count())
+      assert(ref === Similarity.DriftHistogram.of(Seq(e)).head)
   }
 
   test("st11 incremental closure: streamed N-tick labels == batch fold == replay-invariant") {
@@ -683,7 +689,7 @@ class StreamsSpec extends SparkSpec {
     assert(expected.nonEmpty, "corpus must contain near-dup pairs to cluster")
     spark.conf.set(graft.GraftConfig.ClosureUnionFindMaxKey, "0")
     try {
-      graft.llm.Dedup.lastMergePath.set("")
+      graft.EngineState.of(spark).lastMergePath.set("")
       val src = tmpDir("st11fb-src")
       val ledger = tmpDir("st11fb-ledger") + "/l"
       val labels = tmpDir("st11fb-labels") + "/lab"
@@ -692,7 +698,7 @@ class StreamsSpec extends SparkSpec {
       streamDocs.coalesce(1).write.mode("append").parquet(src)
       val q = Streams.runIncrementalClosureStream(spark, src, ledger, labels, ckpt)
       q.awaitTermination(120000)
-      assert(graft.llm.Dedup.lastMergePath.get === "distributed",
+      assert(graft.EngineState.of(spark).lastMergePath.get === "distributed",
         "the lowered bound must route the fold through dedupClusters")
       val l = graft.llm.Dedup.readClosureLabels(spark, labels)
       val sizes = l.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
